@@ -53,9 +53,9 @@ object AmoWhitelistCli {
   def main(args: Array[String]): Unit = {
     val o = Cli.parseArgs(args)
     val spark = Cli.session()
-    val r = AmoWhitelist.run(Cli.readTable(spark, o("input")), o("prefix"), Cli.date(o))
-    println(s"whitelist=${r.whitelist.count()} featured=${r.featured.count()} " +
-      s"featured_whitelist=${r.featuredWhitelist.count()}")
+    val (_, Seq(wl, ft, fwl)) =
+      AmoWhitelist.publish(Cli.readTable(spark, o("input")), o("prefix"), Cli.date(o))
+    println(s"whitelist=${wl.rows} featured=${ft.rows} featured_whitelist=${fwl.rows}")
     spark.stop()
   }
 }
@@ -71,10 +71,10 @@ object UpdateWhitelistCli {
     val probe = o.get("validate-guids-url").map(url =>
       graft.operators.Liveness.httpProbe(url,
         o.getOrElse("probe-timeout-ms", "5000").toInt))
-    val out = UpdateWhitelist.run(Cli.readTable(spark, o("input")), o("prefix"),
+    val (_, out) = UpdateWhitelist.publish(Cli.readTable(spark, o("input")), o("prefix"),
       Cli.date(o), allowShort = o.get("allow-shortlist").contains("true"),
       guidCol = o.getOrElse("guid-col", "guid"), probe = probe)
-    println(s"guids=${out.count()}")
+    println(s"guids=${out.rows}")
     spark.stop()
   }
 }
@@ -83,10 +83,10 @@ object GuidRankingCli {
   def main(args: Array[String]): Unit = {
     val o = Cli.parseArgs(args)
     val spark = Cli.session()
-    val out = GuidRanking.run(Cli.readTable(spark, o("input")),
+    val (_, out) = GuidRanking.publish(Cli.readTable(spark, o("input")),
       o.getOrElse("guid-col", "addon_id"), o.getOrElse("client-col", "client_id"),
       o.getOrElse("date-col", "submission_date"), o("date"), o("prefix"), Cli.date(o))
-    println(s"guids=${out.count()}")
+    println(s"guids=${out.rows}")
     spark.stop()
   }
 }
@@ -95,9 +95,9 @@ object AmoDumpCli {
   def main(args: Array[String]): Unit = {
     val o = Cli.parseArgs(args)
     val spark = Cli.session()
-    val out = AmoDump.run(Cli.readTable(spark, o("addons")),
+    val (_, out) = AmoDump.publish(Cli.readTable(spark, o("addons")),
       Cli.readTable(spark, o("versions")), o("prefix"), Cli.date(o))
-    println(s"addons=${out.count()}")
+    println(s"addons=${out.rows}")
     spark.stop()
   }
 }

@@ -32,9 +32,14 @@ object AmoDump {
       .where(col("first_create_date").isNotNull)
 
   def run(addons: DataFrame, versions: DataFrame, prefix: String,
-      asOf: LocalDate): DataFrame = {
+      asOf: LocalDate): DataFrame =
+    publish(addons, versions, prefix, asOf)._1
+
+  /** [[run]], also returning the published artifact. */
+  def publish(addons: DataFrame, versions: DataFrame, prefix: String,
+      asOf: LocalDate): (DataFrame, JsonArtifact.Published) = {
     val dump = transform(addons, versions).orderBy("guid")
-    JsonArtifact.writeKeyedObject(dump, "guid", prefix, "extended_addons_database.json", asOf)
-    dump
+    (dump, JsonArtifact.publish(dump, prefix, asOf,
+      JsonArtifact.Sink("extended_addons_database.json", Some("guid"))).head)
   }
 }

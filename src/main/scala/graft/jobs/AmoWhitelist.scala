@@ -19,9 +19,12 @@ import graft.io.JsonArtifact
   *    different from the any-file loader check F8, taar_utils.py:92)
   *  - pioneer guid rejected (:71-73)
   *
-  * Scale: `.cache()` + three filtered writes — Catalyst does not share
-  * scans across actions, so the explicit cache is the idiomatic
-  * multi-sink single-scan (SURVEY.md §4).
+  * Scale: one action for all three artifacts. Catalyst does not share
+  * scans across actions, so instead of caching the dump and running one
+  * sorted collect per artifact, [[publish]] sorts the dump once, carries
+  * the two predicates along as flag columns, and splits the collected
+  * rows into the three artifacts on the driver (`JsonArtifact.publish`).
+  * Nothing is cached, so nothing is left for the caller to free.
   */
 object AmoWhitelist {
 
@@ -47,24 +50,26 @@ object AmoWhitelist {
 
   case class Result(whitelist: DataFrame, featured: DataFrame, featuredWhitelist: DataFrame)
 
-  /** A3 — multi-sink fan-out from a single cached scan. */
-  def transform(dump: DataFrame, asOf: LocalDate): Result = {
-    val src = dump.cache()
+  /** A3 — the three-way fan-out as lazy frames over the dump. */
+  def transform(dump: DataFrame, asOf: LocalDate): Result =
     Result(
-      whitelist = src.where(whitelistPred(asOf)),
-      featured = src.where(featuredPred),
-      featuredWhitelist = src.where(whitelistPred(asOf) && featuredPred))
-  }
+      whitelist = dump.where(whitelistPred(asOf)),
+      featured = dump.where(featuredPred),
+      featuredWhitelist = dump.where(whitelistPred(asOf) && featuredPred))
 
   /** Full job: transform + three dual-versioned artifacts (K1). */
-  def run(dump: DataFrame, prefix: String, asOf: LocalDate): Result = {
-    val r = transform(dump, asOf)
-    JsonArtifact.writeKeyedObject(r.whitelist.orderBy("guid"), "guid",
-      prefix, "whitelist_addons_database.json", asOf)
-    JsonArtifact.writeKeyedObject(r.featured.orderBy("guid"), "guid",
-      prefix, "featured_addons_database.json", asOf)
-    JsonArtifact.writeKeyedObject(r.featuredWhitelist.orderBy("guid"), "guid",
-      prefix, "featured_whitelist_addons.json", asOf)
-    r
+  def run(dump: DataFrame, prefix: String, asOf: LocalDate): Result =
+    publish(dump, prefix, asOf)._1
+
+  /** [[run]], also returning the three published artifacts (whitelist,
+    * featured, featured whitelist), all from ONE sorted collect. */
+  def publish(dump: DataFrame, prefix: String,
+      asOf: LocalDate): (Result, Seq[JsonArtifact.Published]) = {
+    val (wl, ft) = (whitelistPred(asOf), featuredPred)
+    def sink(fname: String, when: Column*) = JsonArtifact.Sink(fname, Some("guid"), when)
+    (transform(dump, asOf), JsonArtifact.publish(dump.orderBy("guid"), prefix, asOf,
+      sink("whitelist_addons_database.json", wl),
+      sink("featured_addons_database.json", ft),
+      sink("featured_whitelist_addons.json", wl, ft)))
   }
 }

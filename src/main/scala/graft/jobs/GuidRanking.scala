@@ -24,9 +24,14 @@ object GuidRanking {
       .agg(count(col(clientCol)).as("install_count"))
 
   def run(addons: DataFrame, guidCol: String, clientCol: String, dateCol: String,
-      date: String, prefix: String, asOf: LocalDate): DataFrame = {
+      date: String, prefix: String, asOf: LocalDate): DataFrame =
+    publish(addons, guidCol, clientCol, dateCol, date, prefix, asOf)._1
+
+  /** [[run]], also returning the published artifact. */
+  def publish(addons: DataFrame, guidCol: String, clientCol: String, dateCol: String,
+      date: String, prefix: String, asOf: LocalDate): (DataFrame, JsonArtifact.Published) = {
     val ranking = transform(addons, guidCol, clientCol, dateCol, date).orderBy("guid")
-    JsonArtifact.writeKeyedObject(ranking, "guid", prefix, "guid_install_ranking.json", asOf)
-    ranking
+    (ranking, JsonArtifact.publish(ranking, prefix, asOf,
+      JsonArtifact.Sink("guid_install_ranking.json", Some("guid"))).head)
   }
 }

@@ -32,16 +32,23 @@ object UpdateWhitelist {
     * accepts survive — executor-side fan-out, probe failures = dead. */
   def run(editorial: DataFrame, prefix: String, asOf: LocalDate,
       allowShort: Boolean = false, guidCol: String = "guid",
-      probe: Option[String => Boolean] = None): DataFrame = {
+      probe: Option[String => Boolean] = None): DataFrame =
+    publish(editorial, prefix, asOf, allowShort, guidCol, probe)._1
+
+  /** [[run]], also returning the published artifact. The floor is checked
+    * on the rows the one collect returned and those same rows are
+    * published: no separate `count()` re-runs the job (or the probe). */
+  def publish(editorial: DataFrame, prefix: String, asOf: LocalDate,
+      allowShort: Boolean = false, guidCol: String = "guid",
+      probe: Option[String => Boolean] = None): (DataFrame, JsonArtifact.Published) = {
     val valid = transform(editorial, guidCol)
     val result = probe match {
       case Some(p) =>
         graft.operators.Liveness.filterLiveDf(valid, "guid", p).orderBy("guid")
       case None => valid
     }
-    val n = result.count()
-    if (n < MinCount && !allowShort) throw new ShortWhitelistError(n.toInt, MinCount)
-    JsonArtifact.writeRows(result, prefix, "only_guids_top_200.json", asOf)
-    result
+    val Seq(list) = JsonArtifact.collect(result, JsonArtifact.Sink("only_guids_top_200.json"))
+    if (list.rows < MinCount && !allowShort) throw new ShortWhitelistError(list.rows, MinCount)
+    (result, list.write(result, prefix, asOf))
   }
 }

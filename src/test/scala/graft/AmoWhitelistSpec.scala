@@ -82,4 +82,35 @@ class AmoWhitelistSpec extends SparkSuite {
     assert(r.featured.select("guid").as[String].collect().toSet == Set("feat@x", "both@x"))
     assert(r.featuredWhitelist.select("guid").as[String].collect().toSet == Set("both@x"))
   }
+
+  test("run: three artifacts from one action, equal to the Result frames, nothing cached") {
+    val addons = Seq(
+      addon("wl@x"), addon("wl2@x", rating = 3.0),
+      addon("feat@x", rating = 2.0, promoted = "recommended"),
+      addon("both@x", promoted = "recommended"),
+      addon("none@x", rating = 1.0), addon(AmoWhitelist.PioneerGuid, promoted = "recommended"))
+    val path = tmpDir("amowl-in") + "/dump"
+    spark.createDataFrame(addons).write.parquet(path)
+    val dump = spark.read.parquet(path)
+    val out = tmpDir("amowl-out")
+    val sc = spark.sparkContext
+    val persistedBefore = sc.getPersistentRDDs.keySet
+    val (r, jobs) = countJobs(AmoWhitelist.run(dump, out, asOf))
+    assert(jobs <= 2, s"AmoWhitelist.run launched $jobs jobs")
+    assert((sc.getPersistentRDDs.keySet -- persistedBefore).isEmpty, "run persisted an RDD")
+    assert(dump.storageLevel == org.apache.spark.storage.StorageLevel.NONE, "run cached the dump")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper
+    def artifactGuids(fname: String): Set[String] = {
+      val bytes = graft.io.JsonArtifact.readBzip2(s"$out/$fname.bz2", dump)
+      val it = mapper.readTree(bytes).fieldNames()
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toSet
+    }
+    def guids(df: org.apache.spark.sql.DataFrame) = df.select("guid").as[String].collect().toSet
+    assert(artifactGuids("whitelist_addons_database.json") == guids(r.whitelist))
+    assert(artifactGuids("featured_addons_database.json") == guids(r.featured))
+    assert(artifactGuids("featured_whitelist_addons.json") == guids(r.featuredWhitelist))
+    assert(guids(r.whitelist) == Set("wl@x", "wl2@x", "both@x"))
+    assert(guids(r.featured) == Set("feat@x", "both@x", AmoWhitelist.PioneerGuid))
+    assert(guids(r.featuredWhitelist) == Set("both@x"))
+  }
 }

@@ -25,6 +25,22 @@ class JobsSpec extends SparkSuite {
     assert(res.count() == 2)
   }
 
+  test("UpdateWhitelist: the floor is checked on the rows that are published") {
+    // the probe accepts each guid only on its first call: a job that
+    // evaluates the list twice (once for the floor, once for the artifact)
+    // passes the floor on one set and publishes another
+    FirstCallProbe.calls.clear()
+    val guids = (0 until 150).map(i => f"g$i%03d@x")
+    val dir = tmpDir("uw-probe")
+    UpdateWhitelist.run(guids.toDF("guid"), dir, asOf, probe = Some(FirstCallProbe.probe))
+    val lines = new String(JsonArtifact.readBzip2(s"$dir/only_guids_top_200.json.bz2",
+      spark.range(1).toDF()), "UTF-8").linesIterator.toSeq
+    assert(lines.size == guids.size, s"published ${lines.size} guids; the floor passed on ${guids.size}")
+    assert(lines == guids.map(g => s"""{"guid":"$g"}"""))
+    assert(FirstCallProbe.calls.values().stream().allMatch(_.get == 1),
+      "a guid was probed more than once")
+  }
+
   test("GuidRanking: date-partition filter + group-by count (A1/F3)") {
     val addons = Seq(
       ("2024-06-01", "g1", "c1"), ("2024-06-01", "g1", "c2"),
@@ -229,4 +245,13 @@ class JobsSpec extends SparkSuite {
     assert(out.map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq ==
       Seq(("a", "b", 2L), ("a", "c", 1L), ("b", "c", 1L)))
   }
+}
+
+/** A liveness probe that accepts each guid only on its first call. The
+  * state lives in this JVM-wide object, which local-mode tasks share. */
+object FirstCallProbe {
+  val calls = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]
+
+  val probe: String => Boolean = g =>
+    calls.computeIfAbsent(g, _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet() == 1
 }

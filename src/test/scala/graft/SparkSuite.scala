@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusShim
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,6 +33,24 @@ trait SparkSuite extends AnyFunSuite {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** `f`'s result and the number of Spark jobs it started. The listener
+    * bus is drained before the listener is added (earlier jobs' queued
+    * events are not counted) and before it is read. */
+  def countJobs[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusShim.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = f
+      ListenerBusShim.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
   }
 
   /** Count shuffle exchanges with AQE disabled (AQE wraps the executed
