@@ -69,17 +69,11 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.defaultCores
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val spark = SparkSession.builder().withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // host-load evidence, sampled before warmup and again at record time
@@ -136,26 +130,6 @@ object Bench {
       sys.exit(2)
     }
     System.err.println(s"[bench] ${selected.size} queries: ${selected.map(_._1).mkString(",")}")
-    // Cross-query isolation: graph/CC queries localCheckpoint per-
-    // iteration frames whose blocks otherwise live until the
-    // ContextCleaner happens to GC the RDD references — 74 queries × 3
-    // reps of accumulation produced round 5's phantom q66=14.2s (2.8s in
-    // isolation, same commit). After each query's reps, all cached
-    // frames and checkpoint blocks are dropped deterministically; every
-    // rep rebuilds its frames from scratch, so nothing live is lost.
-    // EXCEPT the graph family's memoized shared edge frame: it is the
-    // in-app analogue of a bucketed derived table (one bounded frame per
-    // data dir, shared by 8+ queries by design — round-12 change), so
-    // releasing it would both re-pay the basket→pair materialization per
-    // rep AND poison the memo (truncated lineage cannot recompute; the
-    // memo revalidates liveness, but sparing it is the point).
-    def releaseQueryState(): Unit = {
-      spark.catalog.clearCache()
-      val keep = graft.queries.GraphQueries.sharedRddIds(spark) ++
-        graft.queries.DedupQueries.sharedRddIds(spark)
-      spark.sparkContext.getPersistentRDDs
-        .foreach { case (id, rdd) => if (!keep.contains(id)) rdd.unpersist(blocking = false) }
-    }
     def sec(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     // per-query warm-up reps, EXCLUDED from the statistic (VERDICT r11
     // #8): the first execution of an iterative query pays first-touch
@@ -164,14 +138,14 @@ object Bench {
     // record over-reported the graph family 3-4× without this
     val warmups = sys.env.getOrElse("SPARK_GRAFT_WARMUP_REPS", "1").toInt
     val results = selected.map { case (name, fn) =>
-      (1 to warmups).foreach { _ => runOnce(name, fn); releaseQueryState() }
+      (1 to warmups).foreach { _ => runOnce(name, fn); SparkEntry.releaseQueryState(spark) }
       // release BETWEEN reps too: rep 1 of the graph queries measured at
       // its isolated-run time while reps 2-3 ran 2-3× slower against
       // rep 1's lingering checkpoint blocks — the median then reported
       // the contaminated number (round-6 finding, same shape as round
       // 5's cross-query phantom)
       val runs = (1 to reps).map { _ =>
-        val r = runOnce(name, fn); releaseQueryState(); r
+        val r = runOnce(name, fn); SparkEntry.releaseQueryState(spark); r
       }
       // failed reps are excluded from the statistic; a query with NO
       // successful rep is EXCLUDED from the timing fields entirely and
@@ -210,7 +184,7 @@ object Bench {
     val concurrentWall: Option[Double] =
       if (streams <= 0) None
       else {
-        releaseQueryState()
+        SparkEntry.releaseQueryState(spark)
         val names = selected.map(_._1)
         val t0 = System.nanoTime()
         val threads = (0 until streams).map { sid =>
@@ -227,7 +201,7 @@ object Bench {
         }
         threads.foreach(_.join())
         val wall = (System.nanoTime() - t0) / 1e9
-        releaseQueryState()
+        SparkEntry.releaseQueryState(spark)
         System.err.println(f"[bench] $streams concurrent streams x ${names.size} queries: $wall%.1f s wall")
         Some(wall)
       }

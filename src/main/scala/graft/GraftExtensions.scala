@@ -16,8 +16,9 @@ import graft.functions.{Codec, DotProduct, HtmlText, UnigramSegment, IntSqDist, 
   *   spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * or programmatically `SparkSession.builder().withExtensions(new
-  * GraftExtensions)`. Installs:
+  * (the form [[GraftSession]] sets for every graft main and the test
+  * suites), or programmatically `withExtensions(new GraftExtensions)` on
+  * a session builder. Installs:
   *
   *  - the native functions (`vec_dot`, `vec_norm2`, `md5_prefix64`,
   *    `zlib_compress`, `zlib_decompress`, `payload_compress`,

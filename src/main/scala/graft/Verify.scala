@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,14 +11,7 @@ object Verify {
       if (args.length > 2) { val pats = args(2).split(',').toSeq
                              n => pats.exists(n.contains) }
       else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => only(kv._1)).foreach { case (name, fn) =>
@@ -35,11 +27,7 @@ object Verify {
       // release per query (ADVICE r18): checkpoint blocks from one query
       // must not accumulate across the other 162 — Bench's per-rep
       // discipline, minus the memoized shared frames
-      spark.catalog.clearCache()
-      val keep = graft.queries.GraphQueries.sharedRddIds(spark) ++
-        graft.queries.DedupQueries.sharedRddIds(spark)
-      spark.sparkContext.getPersistentRDDs
-        .foreach { case (id, rdd) => if (!keep.contains(id)) rdd.unpersist(blocking = false) }
+      SparkEntry.releaseQueryState(spark)
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleSqlJson)
     spark.stop()

@@ -21,16 +21,7 @@ object Cli {
       case Array(k, v) if k.startsWith("--") => k.stripPrefix("--") -> v
     }.toMap
 
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    SparkSession.builder().withExtensions(new graft.GraftExtensions)
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+  def session(): SparkSession = graft.GraftSession.builder().getOrCreate()
 
   /** Read a table by the FINAL path segment's extension: .json /
     * .jsonl (incl. .bz2-compressed) or parquet. Matching on the last

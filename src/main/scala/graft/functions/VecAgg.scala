@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * contains it carry 64–128 aggregate expression trees. For the
   * centroid/stats steps of the ANN and SemDeDup training chains that
   * plan is re-analyzed and re-optimized once per AQE stage per loop
-  * round: R18JobProbe measured q117 spending 3.1 s of its 4.5 s in
+  * round: OPTIMIZATION_r18.md's job profile shows q117 spending 3.1 s in
   * DRIVER planning across 76 jobs, and the optimizer walks those wide
   * Aggregates every pass (optimization-guide §7.3 "very large plans").
   * One TypedImperativeAggregate with an array buffer collapses each fan

@@ -48,7 +48,7 @@ object Materialize {
     * TWICE per action: once for the sample, once for the shuffle map.
     * For a map-only query (no exchange anywhere else) that is the whole
     * scan + projection run twice — measured 2.0× on q78/q135/q27 at
-    * sf0.1 (R18SortProbe; optimization-guide §7.2 "duplicated
+    * sf0.1 (OPTIMIZATION_r18.md; optimization-guide §7.2 "duplicated
     * subtrees": the sampler is a hidden second consumer).
     *
     * Fix = the §9 plan-branch-reuse rule applied to the hidden branch:
@@ -64,10 +64,9 @@ object Materialize {
     * bench/verify HARNESS, which taxed every query whose final stage is
     * cheap (the driver's 32-core run regressed 102/161 queries). It now
     * lives in the QUERY layer, applied per query where a paired
-    * 32-core A/B showed a win (each site cites its numbers); the bench
-    * and verify mains time/dump the declared queries verbatim.
-    * `SPARK_GRAFT_SORTSHARED=0` turns every application into the
-    * identity — the measurement A/B switch.
+    * 32-core A/B showed a win (OPTIMIZATION_r19.md "sortShared
+    * allowlist"), through [[sortSharedQuery]]; the bench and verify
+    * mains time/dump the declared queries verbatim.
     *
     * Scale note: the checkpoint is a non-replicated executor-memory
     * materialization of the pre-sort result — on executor loss the job
@@ -82,19 +81,7 @@ object Materialize {
     * queries): no behavior change. The sort keys are remapped onto the
     * checkpoint's fresh attribute ids positionally, so expression keys
     * (`orderBy(md5(..))`) survive. */
-  /** Query-layer application of [[sortShared]]: wrap a declared query's
-    * (session, dir) => frame function at its registration site. Applied
-    * ONLY to queries with a paired 32-core A/B win on record
-    * (OPTIMIZATION_r19.md "sortShared allowlist") — round 18 applied the
-    * rewrite to all 163 queries from the harness and taxed every query
-    * whose final stage was already cheap. Identity under
-    * `SPARK_GRAFT_SORTSHARED=0` (the A/B switch). */
-  def sortSharedQuery(fn: (SparkSession, String) => DataFrame)
-      : (SparkSession, String) => DataFrame =
-    (s, d) => sortShared(fn(s, d))
-
   def sortShared(df: DataFrame): DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_SORTSHARED").contains("0")) return df
     import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, SortOrder}
     import org.apache.spark.sql.catalyst.plans.logical.Sort
     df.queryExecution.analyzed match {
@@ -111,33 +98,15 @@ object Materialize {
     }
   }
 
-  /** Re-plan `df` in the AQE-off companion session (same SparkContext,
-    * isolated SQLConf) and hand it back wrapped for the caller's
-    * session.
-    *
-    * RETIRED from every query path (round 19). Round 18 applied it to
-    * the BPE top-pair collects and q82's convergence sync on the theory
-    * that AQE's per-stage re-optimization costs more than its
-    * coalescing recovers for a 1-row driver sync. The theory holds only
-    * at LOW core counts: the static plan fixes each sync's shuffle at
-    * `spark.sql.shuffle.partitions` (= cores) tasks where AQE coalesces
-    * the KB-sized exchange to ~1, so the overhead grows linearly with
-    * the core count × rounds — the driver's paired 32c/8c runs measured
-    * the wrapped families 1.6–2.3× slower at 32 cores than at 8
-    * (VERDICT r18 #1/#3), precisely the failure mode the LPA family's
-    * recorded negative result predicted. Kept for completeness (tests
-    * pin its session-isolation semantics); do not reintroduce it on a
-    * query path without a ≥2-core-count A/B. */
-  def noAqe(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val ns = noAqeSession(spark)
-    ns.synchronized {
-      ns.conf.set("spark.sql.adaptive.enabled", "false")
-      MirroredConfs.foreach(k =>
-        spark.conf.getOption(k).foreach(ns.conf.set(k, _)))
-      GraftShim.ofRows(ns, df.queryExecution.analyzed)
-    }
-  }
+  /** The sortShared allowlist: each query registry under `queries/`
+    * wraps a declared query's (session, dir) => frame function with this
+    * at its registration site ONLY where a paired 32-core A/B measured a
+    * win (OPTIMIZATION_r19.md "sortShared allowlist") — round 18 applied
+    * the rewrite to all 163 queries from the harness and taxed every
+    * query whose final stage was already cheap. */
+  def sortSharedQuery(fn: (SparkSession, String) => DataFrame)
+      : (SparkSession, String) => DataFrame =
+    (s, d) => sortShared(fn(s, d))
 
   /** `localCheckpoint()` that PRESERVES the frame's hash partitioning.
     *
@@ -164,9 +133,10 @@ object Materialize {
     * here is otherwise frozen at `spark.sql.shuffle.partitions`
     * (= the core count in the bench contract) partitions — and every
     * downstream loop stage over it then schedules one task per core per
-    * round regardless of data size. R18JobProbe shows each such stage
-    * carrying a fixed per-task cost (~0.3–0.8 s of executorRunTime per
-    * 32-way tiny task at 32 cores, GC-free) that the 8-core run simply
+    * round regardless of data size. The round-19 job profile shows each
+    * such stage carrying a fixed per-task cost (~0.3–0.8 s of
+    * executorRunTime per 32-way tiny task at 32 cores, GC-free;
+    * OPTIMIZATION_r19.md) that the 8-core run simply
     * pays 4× less of — the driver's r18 paired runs measured the loop
     * families 1.7–4× FASTER at 8 cores on identical code. Passing
     * `parts = Some(n)` with n derived from the INPUT BYTES (the caller

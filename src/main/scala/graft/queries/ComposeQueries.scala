@@ -86,8 +86,8 @@ object ComposeQueries {
     pipelineCore(s, Tables.documents(s, dir),
       occIn = Some(DedupQueries.shingleOccStrict(s, dir)), sourceGate = true)
 
-  /** q100 body over an arbitrary documents frame (Profile probes it on
-    * replicated corpora; `docs` is consumed by both corpus passes).
+  /** q100 body over an arbitrary documents frame (docs/SCALE.md measures it
+    * on replicated corpora; `docs` is consumed by both corpus passes).
     * `occIn` optionally supplies an already-hashed corpus shingle
     * occurrence frame (the named query passes the family-shared memo);
     * absent, the pass-2 mint runs over `docs` as before. `sourceGate`

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.Materialize.sortSharedQuery
 
 /** Document deduplication for a training-data pipeline: exact (hash
   * group-by), MinHash signatures, MinHash+LSH banding with exact n-gram
@@ -22,7 +23,7 @@ import graft.Tables
   *  - SimHash / rolling fingerprints are PER-ROW HOF chains — map-only,
   *    no shuffle, no UDF; MinHash signatures instead hash each DISTINCT
   *    shingle once (explode+join+min-agg; measured faster than the
-  *    map-only form because HOFs are interpreted — see tools/Profile).
+  *    map-only form because HOFs are interpreted — docs/SCALE.md).
   *  - LSH banding shuffles only (doc_id, band_hash) pairs — 4 small rows
   *    per document, not the text. The band self-join groups only true
   *    collision buckets; with 4-row bands the collision probability for
@@ -107,8 +108,8 @@ object DedupQueries {
 
   /** THE tagged-occurrence mint — one definition serving the family
     * memo (outer = true: gram-less docs keep a null padding row) and
-    * [[q88TaggedOcc]]'s direct form (outer = false), so the Profile
-    * probe and the production memo cannot drift (review finding r13:
+    * [[q88TaggedOcc]]'s direct form (outer = false), so the direct form
+    * and the production memo cannot drift (review finding r13:
     * the single-sourcing rule this file cites for oracle text applies
     * to the mint expression too). */
   private def taggedMintOcc(s: SparkSession, docs: DataFrame,
@@ -798,8 +799,7 @@ object DedupQueries {
     * oracle would catch (the q29/q83 argument). */
   /** The q88 single-pass tagged occurrence mint: kind 0 = distinct
     * 3-token shingles, kind 1 = positional [[DupGramN]]-grams, hashed to
-    * 60 bits — one corpus scan, one tokenization (also probed by
-    * tools/Profile). */
+    * 60 bits — one corpus scan, one tokenization. */
   private[graft] def q88TaggedOcc(s: SparkSession, dir: String): DataFrame =
     taggedMintOcc(s, Tables.documents(s, dir), outer = false)
 
@@ -1016,7 +1016,7 @@ object DedupQueries {
     * is deliberately UNHASHED (raw gram strings) — the gate proves the
     * hashed plan loses nothing to collisions. */
   /** Positional [[DupGramN]]-gram mint over a `text` column — the ONE
-    * definition shared by q83, q94, and the Profile scaling probes (the
+    * definition shared by q83, q94 and their scaling runs (the
     * SQL dual is [[dupGramCtes]]'s `g` CTE). */
   private[graft] def dupGramsCol: Column =
     graft.functions.Cols.bind(toks(col("text")))(dupGramArr)
@@ -1403,8 +1403,8 @@ object DedupQueries {
           .over(Window.partitionBy($"doc_id").orderBy($"p"))))
   }
 
-  /** q94 body over an arbitrary documents frame (Profile probes it on
-    * replicated corpora); grams come from the shared [[dupGramsCol]]. */
+  /** q94 body over an arbitrary documents frame (docs/SCALE.md measures it
+    * on replicated corpora); grams come from the shared [[dupGramsCol]]. */
   private[graft] def dupRunCore(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
     dupRunKeyed(s, docs).groupBy($"doc_id", $"run_key")
@@ -1480,8 +1480,8 @@ object DedupQueries {
   def q147SpanScrub(s: SparkSession, dir: String): DataFrame =
     spanScrubCore(s, Tables.documents(s, dir))
 
-  /** q147 body over an arbitrary documents frame (Profile probes it on
-    * replicated corpora). */
+  /** q147 body over an arbitrary documents frame (docs/SCALE.md measures it
+    * on replicated corpora). */
   private[graft] def spanScrubCore(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
     val runs = dupRunKeyed(s, docs)
@@ -1580,8 +1580,8 @@ object DedupQueries {
   def q99UrlDedup(s: SparkSession, dir: String): DataFrame =
     urlDedupCore(s, Tables.documents(s, dir))
 
-  /** q99 body over an arbitrary documents frame (Profile probes it on
-    * replicated corpora). */
+  /** q99 body over an arbitrary documents frame (docs/SCALE.md measures it
+    * on replicated corpora). */
   private[graft] def urlDedupCore(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
     val www = when($"doc_id" % 5 === 0, lit("www.")).otherwise(lit(""))
@@ -1677,8 +1677,8 @@ object DedupQueries {
   def q104SourceSimilarity(s: SparkSession, dir: String): DataFrame =
     sourceSimilarityCore(s, Tables.documents(s, dir))
 
-  /** q104 body over an arbitrary documents frame (Profile probes it on
-    * replicated corpora). */
+  /** q104 body over an arbitrary documents frame (docs/SCALE.md measures it
+    * on replicated corpora). */
   private[graft] def sourceSimilarityCore(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
     val occ = docs
@@ -1771,8 +1771,8 @@ object DedupQueries {
   def q106SegmentDedup(s: SparkSession, dir: String): DataFrame =
     segmentDedupCore(s, Tables.documents(s, dir))
 
-  /** q106 body over an arbitrary documents frame (Profile probes it on
-    * replicated corpora). */
+  /** q106 body over an arbitrary documents frame (docs/SCALE.md measures it
+    * on replicated corpora). */
   private[graft] def segmentDedupCore(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
     val segsOf = graft.functions.Cols.bind(toks($"text")) { t =>
@@ -2230,8 +2230,8 @@ object DedupQueries {
       Tables.documents(s, dir).select($"doc_id"))
   }
 
-  /** q151 body over an arbitrary documents frame (Profile probes it on
-    * replicated corpora — the direct signature mint, no memo). */
+  /** q151 body over an arbitrary documents frame (docs/SCALE.md measures it
+    * on replicated corpora — the direct signature mint, no memo). */
   private[graft] def admissionGateCore(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
     admissionFromSig(s,
@@ -2277,11 +2277,6 @@ object DedupQueries {
        |LEFT JOIN hits h ON h.doc_id = d.doc_id
        |ORDER BY d.doc_id""".stripMargin
 
-  /** sortShared allowlist entry (OPTIMIZATION_r19.md): final-stage reuse
-    * under the deterministic output sort, applied ONLY where a paired
-    * 32-core A/B measured a win. */
-  private def shared(fn: Q): Q = graft.operators.Materialize.sortSharedQuery(fn)
-
   val queries: Map[String, Q] = Map(
     "q151_admission_gate"     -> (q151AdmissionGate _),
     "q142_containment_dedup"  -> (q142ContainmentDedup _),
@@ -2294,10 +2289,10 @@ object DedupQueries {
     "q24_dedup_exact"         -> (q24DedupExact _),
     "q25_minhash_sig"         -> (q25MinhashSig _),
     "q26_minhash_pairs"       -> (q26MinhashPairs _),
-    "q164_split_leakage"      -> shared(q164SplitLeakage _),
-    "q29_ngram_jaccard"       -> shared(q29NgramJaccard _),
-    "q27_simhash"             -> shared(q27Simhash _),
-    "q28_rolling_fingerprint" -> shared(q28RollingFingerprint _),
+    "q164_split_leakage"      -> sortSharedQuery(q164SplitLeakage _),
+    "q29_ngram_jaccard"       -> sortSharedQuery(q29NgramJaccard _),
+    "q27_simhash"             -> sortSharedQuery(q27Simhash _),
+    "q28_rolling_fingerprint" -> sortSharedQuery(q28RollingFingerprint _),
     "q83_dup_gram_fraction"   -> (q83DupGramFraction _),
     "q86_simhash_pairs"       -> (q86SimhashPairs _),
     "q170_phash_neardup"      -> (q170PhashNeardup _),

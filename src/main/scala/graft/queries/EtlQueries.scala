@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.io.KvSink
+import graft.operators.Materialize.sortSharedQuery
 import graft.operators.Multimodal
 
 /** Operators whose raw output is not SQL-reproducible (PRNG samples,
@@ -416,8 +417,8 @@ object EtlQueries {
       .select($"l_returnflag".as("flag"), $"l_extendedprice".as("x")))
   }
 
-  /** q93 body over an arbitrary (flag, x) frame (Profile probes it on
-    * replicated corpora; the named query binds the real table). */
+  /** q93 body over an arbitrary (flag, x) frame (docs/SCALE.md measures it
+    * on replicated corpora; the named query binds the real table). */
   private[graft] def quantileCore(s: SparkSession, li: DataFrame): DataFrame = {
     import s.implicits._
     // approx summaries: |groups| rows, checkpointed so the join-back
@@ -494,14 +495,15 @@ object EtlQueries {
   val Q96Rsd = 0.05
 
   /** Absolute slack for the q96 bound below the linear-counting regime
-    * (register collisions on ~5-element groups; calibrated by Q96Probe). */
+    * (register collisions on ~5-element groups: a 5-doc leaf estimates
+    * 4, 20% relative — the worst case measured at sf0.001–0.1). */
   val Q96AbsSlack = 3.0
 
   def q96RollupDistinct(s: SparkSession, dir: String): DataFrame =
     rollupDistinctCore(s, Tables.documents(s, dir))
 
-  /** q96 body over an arbitrary documents frame (Profile probes it on
-    * replicated corpora). */
+  /** q96 body over an arbitrary documents frame (docs/SCALE.md measures it
+    * on replicated corpora). */
   private[graft] def rollupDistinctCore(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
     val rsd = Q96Rsd
@@ -616,8 +618,8 @@ object EtlQueries {
   def q108ShardManifest(s: SparkSession, dir: String): DataFrame =
     shardManifestCore(s, Tables.documents(s, dir))
 
-  /** q108 body over an arbitrary documents frame (Profile probes it on
-    * replicated corpora). */
+  /** q108 body over an arbitrary documents frame (docs/SCALE.md measures it
+    * on replicated corpora). */
   private[graft] def shardManifestCore(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
     val keyed = docs.select($"doc_id", $"n_chars",
@@ -892,23 +894,18 @@ object EtlQueries {
        |  WHERE o.a >= t.a AND o.b >= t.b AND (o.a > t.a OR o.b > t.b))
        |ORDER BY n_words DESC, awl_milli DESC, doc_id""".stripMargin
 
-  /** sortShared allowlist entry (OPTIMIZATION_r19.md): final-stage reuse
-    * under the deterministic output sort, applied ONLY where a paired
-    * 32-core A/B measured a win. */
-  private def shared(fn: Q): Q = graft.operators.Materialize.sortSharedQuery(fn)
-
   val queries: Map[String, Q] = Map(
     "q138_pareto_frontier"    -> (q138ParetoFrontier _),
     "q115_theta_sketch"       -> (q115ThetaSketch _),
     "q108_shard_manifest"     -> (q108ShardManifest _),
     "q101_weighted_sample"    -> (q101WeightedSample _),
     "q40_bernoulli_sample"    -> (q40BernoulliSample _),
-    "q41_kv_encode"           -> shared(q41KvEncode _),
+    "q41_kv_encode"           -> sortSharedQuery(q41KvEncode _),
     "q42_multimodal_features" -> (q42MultimodalFeatures _),
     "q43_heavy_hitters"       -> (q43HeavyHitters _),
     "q87_cms_frequency"       -> (q87CmsFrequency _),
     "q92_bloom_join"          -> (q92BloomJoin _),
-    "q93_quantile_sketch"     -> shared(q93QuantileSketch _),
+    "q93_quantile_sketch"     -> sortSharedQuery(q93QuantileSketch _),
     "q96_rollup_distinct"     -> (q96RollupDistinct _),
   )
 

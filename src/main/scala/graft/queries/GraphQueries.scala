@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.operators.Materialize.sortSharedQuery
 
 /** Graph analytics over relational co-occurrence graphs.
   *
@@ -109,7 +110,7 @@ object GraphQueries {
     * per round — a fixed cost that grows with the cluster while the
     * work per task shrinks (the r18 driver's paired runs: the loop
     * families 1.7–4× faster at 8 cores than at 32 on identical code;
-    * R18JobProbe: 0.3–0.8 s executorRunTime per tiny task, GC-free).
+    * 0.3–0.8 s executorRunTime per tiny task, GC-free — OPTIMIZATION_r19.md).
     * One partition per `spark.graft.graphPartBytes` of input (default
     * 1.5 MB — the measured optimum of a 2/7/14/32-partition sweep at
     * sf0.1×32 cores: 36.2/26.8/29.1/41.4 s family totals; the constant
@@ -650,7 +651,7 @@ object GraphQueries {
           .join(cur.select($"u", $"r".as("r_prev")), "u")
           .select($"u", $"r", abs($"r" - $"r_prev").as("dr")),
         eager = false, parts = gp)
-      // AQE-planned (round-19 revert of the round-18 noAqe experiment —
+      // AQE-planned (round-19 revert of the round-18 AQE-off sync planning —
       // same rationale as bpeTrain's top-pair collect: the static plan's
       // per-sync cost scales with the core count; the driver's paired
       // runs had q82 at 0.44 scaling ratio, i.e. 2.3× slower at 32 cores
@@ -834,7 +835,7 @@ object GraphQueries {
     * [[LpaMaxRounds]] rounds, derives the per-checkpoint deltas, and
     * SELECTS the stop round itself — unlike q82's pinned iteration
     * count, the round count here differs per SF (4/6/8 at
-    * sf0.001/0.01/0.1, Q145Probe), so the oracle must compute it. */
+    * sf0.001/0.01/0.1, PLANS.md), so the oracle must compute it. */
   def q145LpaConverge(s: SparkSession, dir: String): DataFrame =
     lpaConvergeCore(copurchaseEdgesPartitioned(s, dir))
 
@@ -852,7 +853,7 @@ object GraphQueries {
       labels = lpaRound(edges, lm1).localCheckpoint(false)
       // both stop deltas in ONE action: 3-frame join, all sides
       // HashPartitioning(v), 1-row aggregate to the driver
-      // stays AQE-planned (round-18 A/B): unlike q82's sync (noAqe win),
+      // stays AQE-planned (round-18 A/B): unlike q82's sync (an AQE-off win at the time),
       // this join's three sides are bare lazy checkpoints with unknown
       // partitioning, so a static plan plants three real exchanges that
       // AQE instead coalesces — measured 7.21 vs 7.48 in favor of AQE
@@ -1079,7 +1080,7 @@ object GraphQueries {
         else patched(k - 2)
       // candidate prune keyed on the SOURCE, then mirror-swapped: the
       // edge frame is HashPartitioning(u), so a semi join on v would
-      // re-shuffle the whole corpus-sized frame EVERY round (R18JobProbe:
+      // re-shuffle the whole corpus-sized frame EVERY round (OPTIMIZATION_r19.md:
       // the 20–25 MB shuffle writes in each q146 round — churn-
       // independent, exactly what this operator exists to avoid). The
       // mirrored frame is symmetric with each orientation exactly once,
@@ -1183,11 +1184,6 @@ object GraphQueries {
        |SELECT u AS l_partkey, dist FROM d$WspRounds ORDER BY l_partkey""".stripMargin
   }
 
-  /** sortShared allowlist entry (OPTIMIZATION_r19.md): final-stage reuse
-    * under the deterministic output sort, applied ONLY where a paired
-    * 32-core A/B measured a win. */
-  private def shared(fn: Q): Q = graft.operators.Materialize.sortSharedQuery(fn)
-
   val queries: Map[String, Q] = Map(
     "q143_weighted_paths"   -> (q143WeightedPaths _),
     "q141_lpa_assign"       -> (q141LpaAssign _),
@@ -1196,7 +1192,7 @@ object GraphQueries {
     "q146_lpa_edge_churn"   -> (q146LpaEdgeChurn _),
     "q66_pagerank_step"     -> (q66PagerankStep _),
     "q72_pagerank_iters"    -> (q72PagerankIters _),
-    "q77_triangle_count"    -> shared(q77Triangles _),
+    "q77_triangle_count"    -> sortSharedQuery(q77Triangles _),
     "q79_bfs_hops"          -> (q79BfsHops _),
     "q82_pagerank_converge" -> (q82PagerankConverge _),
   )

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Exact._
+import graft.operators.Materialize.sortSharedQuery
 
 /** Relational operator surface (SURVEY.md §2.3-§2.8, §2.11) mapped onto the
   * driver's testdata tables. Each query has a DuckDB oracle with identical
@@ -311,8 +312,8 @@ object RelationalQueries {
       .select($"user_id", $"event_id", unix_micros($"ts").as("tus")))
   }
 
-  /** q112 body over an arbitrary (user_id, event_id, tus) frame (Profile
-    * probes it on replicated corpora). */
+  /** q112 body over an arbitrary (user_id, event_id, tus) frame (docs/SCALE.md
+    * measures it on replicated corpora). */
   private[graft] def skewCore(s: SparkSession, ev: DataFrame): DataFrame = {
     import s.implicits._
     val w = Window.partitionBy($"user_id")
@@ -1782,18 +1783,13 @@ object RelationalQueries {
       .map { case (t, k) => skewSqlOne(t, k) }
       .mkString("", "\nUNION ALL\n", "\nORDER BY table_name, key_name")
 
-  /** sortShared allowlist entry (OPTIMIZATION_r19.md): final-stage reuse
-    * under the deterministic output sort, applied ONLY where a paired
-    * 32-core A/B measured a win. */
-  private def shared(fn: Q): Q = graft.operators.Materialize.sortSharedQuery(fn)
-
   val queries: Map[String, Q] = Map(
     "q163_skew_audit"       -> (q163SkewAudit _),
     "q116_asof_late_audit"  -> (q116AsofLateAudit _),
     "q60_funnel"            -> (q60Funnel _),
     "q67_path_mining"       -> (q67PathMining _),
-    "q68_star_join"         -> shared(q68StarJoin _),
-    "q69_zorder_cells"      -> shared(q69ZorderCells _),
+    "q68_star_join"         -> sortSharedQuery(q68StarJoin _),
+    "q69_zorder_cells"      -> sortSharedQuery(q69ZorderCells _),
     "q73_resample_ffill"    -> (q73ResampleFfill _),
     "q74_data_quality"      -> (q74DataQuality _),
     "q75_cohort_retention"  -> (q75CohortRetention _),
@@ -1833,7 +1829,7 @@ object RelationalQueries {
     "q12_json_trycast"      -> (q12JsonTryCast _),
     "q13_url_build_parse"   -> (q13UrlBuildParse _),
     "q14_quality_gate"      -> (q14QualityGate _),
-    "q15_hof_exists"        -> shared(q15HofExists _),
+    "q15_hof_exists"        -> sortSharedQuery(q15HofExists _),
     "q16_first_last"        -> (q16FirstLast _),
   )
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.Materialize.sortSharedQuery
 
 /** Similarity search over the `embeddings` table (Array[Float], 64-dim).
   *
@@ -386,8 +387,8 @@ object SimilarityQueries {
         .otherwise(lit(0L)).cast("long")
     }).as("codes"))
 
-  /** q95 body over an arbitrary (vec_id, embedding) frame (Profile
-    * probes it on replicated corpora; the named query binds the table). */
+  /** q95 body over an arbitrary (vec_id, embedding) frame (docs/SCALE.md
+    * measures it on replicated corpora; the named query binds the table). */
   private[graft] def sq8Core(s: SparkSession, emb: DataFrame): DataFrame = {
     import s.implicits._
     val stats = sq8Stats(emb)
@@ -474,8 +475,8 @@ object SimilarityQueries {
   def q111PqAdcAnn(s: SparkSession, dir: String): DataFrame =
     pqAdcCore(s, Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")))
 
-  /** q111 body over an arbitrary (vec_id, embedding) frame (Profile
-    * probes it on replicated corpora). Composes the training/encode/scan
+  /** q111 body over an arbitrary (vec_id, embedding) frame (docs/SCALE.md
+    * measures it on replicated corpora). Composes the training/encode/scan
     * pieces below — which the codes-at-ingest path (q118 /
     * [[graft.jobs.CodesIngest]]) reuses with a bucketed table between
     * encode and scan. */
@@ -715,7 +716,7 @@ object SimilarityQueries {
     * hash-match DuckDB — a value-level oracle for a trained quantizer
     * over a rotated space, which a LEARNED rotation cannot give (a
     * float eigenbasis is not SQL-replayable; that variant lives as the
-    * Profile OPQ probe, where the PCA rotation lifts recall@5
+    * measured OPQ variant, where the PCA rotation lifts recall@5
     * 0.16 → 0.36 at sf0.1 — SCALE.md).
     *
     * Measured honestly: on THIS corpus — synthetic, near-isotropic —
@@ -1118,8 +1119,8 @@ object SimilarityQueries {
   def q110SemDedup(s: SparkSession, dir: String): DataFrame =
     semDedupCore(s, Tables.embeddings(s, dir))
 
-  /** q110 body over an arbitrary embeddings frame (Profile probes it on
-    * replicated corpora). */
+  /** q110 body over an arbitrary embeddings frame (docs/SCALE.md measures it
+    * on replicated corpora). */
   private[graft] def semDedupCore(s: SparkSession, embIn: DataFrame): DataFrame = {
     import s.implicits._
     val cents = labelCentroids(embIn)
@@ -1203,8 +1204,8 @@ object SimilarityQueries {
     *
     * Scale: this is what makes SemDeDup 100 TB-safe — with k grown as
     * √n, expected cluster size stays √n, so the within-cluster pair term
-    * is n^1.5 rather than the n²/k of a FIXED labeling (q110's Profile
-    * probe shows ~100× at 10×; this one flattens — SCALE.md row).
+    * is n^1.5 rather than the n²/k of a FIXED labeling (q110's scaling
+    * run shows ~100× at 10×; this one flattens — SCALE.md row).
     * Assignment is a broadcast of k·64 longs (≈16 MB at n=10⁹) against a
     * map-side scan of the checkpointed codes with a WindowGroupLimit
     * argmin; the only corpus-sized exchanges are the vec_id label join
@@ -1243,8 +1244,8 @@ object SimilarityQueries {
     asg.select($"vec_id", $"k".cast("long").as("label"))
   }
 
-  /** q117 body over an arbitrary (vec_id, embedding) frame (Profile
-    * probes it on replicated corpora, where k grows as √10 ≈ 3.2×). */
+  /** q117 body over an arbitrary (vec_id, embedding) frame (docs/SCALE.md
+    * measures it on replicated corpora, where k grows as √10 ≈ 3.2×). */
   private[graft] def semDedupLearnedCore(s: SparkSession, emb: DataFrame): DataFrame =
     semDedupCore(s, emb.join(learnedLabels(s, emb), Seq("vec_id"))
       .select(col("vec_id"), col("label"), col("embedding")))
@@ -2067,11 +2068,6 @@ object SimilarityQueries {
        |ORDER BY query_doc, rn""".stripMargin
   }
 
-  /** sortShared allowlist entry (OPTIMIZATION_r19.md): final-stage reuse
-    * under the deterministic output sort, applied ONLY where a paired
-    * 32-core A/B measured a win. */
-  private def shared(fn: Q): Q = graft.operators.Materialize.sortSharedQuery(fn)
-
   val queries: Map[String, Q] = Map(
     "q133_meanpool_ann"     -> (q133MeanPool _),
     "q131_maxsim_pruned"    -> (q131MaxSimPruned _),
@@ -2086,10 +2082,10 @@ object SimilarityQueries {
     "q110_semdedup"         -> (q110SemDedup _),
     "q102_hard_negatives"   -> (q102HardNegatives _),
     "q90_semantic_decontam" -> (q90SemanticDecontam _),
-    "q30_knn_bruteforce"    -> shared(q30KnnBruteForce _),
+    "q30_knn_bruteforce"    -> sortSharedQuery(q30KnnBruteForce _),
     "q31_embedding_neardup" -> (q31EmbeddingNearDup _),
-    "q32_ivf_ann"           -> shared(q32IvfAnn _),
-    "q59_kmeans_assign"     -> shared(q59KmeansAssign _),
+    "q32_ivf_ann"           -> sortSharedQuery(q32IvfAnn _),
+    "q59_kmeans_assign"     -> sortSharedQuery(q59KmeansAssign _),
     "q95_sq8_ann"           -> (q95Sq8Ann _),
     "q111_pq_adc_ann"       -> (q111PqAdcAnn _),
     "q148_opq_ann"          -> (q148OpqAnn _),

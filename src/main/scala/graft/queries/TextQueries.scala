@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.Materialize.sortSharedQuery
 
 /** Text-analysis operators for a large-scale training-data pipeline:
   * token statistics, quality scoring, language ID (n-gram/stopword
@@ -834,7 +835,7 @@ object TextQueries {
   }
 
   /** q149 body over any (doc_id, source, score) frame (fixtures and
-    * Profile probes bind their own). ONE corpus scan: the gate count is
+    * scaling runs bind their own). ONE corpus scan: the gate count is
     * itself derived from the checkpointed domain (Σc over score ≥ thr),
     * so no per-row pass follows the domain mint. */
   private[graft] def adaptiveGateCore(s: SparkSession, scored: DataFrame): DataFrame = {
@@ -1667,8 +1668,8 @@ object TextQueries {
   def q97ChunkOverlap(s: SparkSession, dir: String): DataFrame =
     chunkCore(s, Tables.documents(s, dir))
 
-  /** q97 body over an arbitrary documents frame (Profile probes it on
-    * replicated corpora). */
+  /** q97 body over an arbitrary documents frame (docs/SCALE.md measures it
+    * on replicated corpora). */
   private[graft] def chunkCore(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
     val chunksCol = graft.functions.Cols.bind(toks($"text")) { t =>
@@ -1745,8 +1746,8 @@ object TextQueries {
   def q98EncodingFilter(s: SparkSession, dir: String): DataFrame =
     encodingCore(s, Tables.documents(s, dir))
 
-  /** q98 body over an arbitrary documents frame (Profile probes it on
-    * replicated corpora). */
+  /** q98 body over an arbitrary documents frame (docs/SCALE.md measures it
+    * on replicated corpora). */
   private[graft] def encodingCore(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
     val nChars = length($"text").cast("long")
@@ -1988,8 +1989,8 @@ object TextQueries {
       aggregate(fs, lit(0L), (acc, f) => acc + clfWeight(s)(f))
     }
 
-  /** q107 body over an arbitrary documents frame (Profile probes it on
-    * replicated corpora). */
+  /** q107 body over an arbitrary documents frame (docs/SCALE.md measures it
+    * on replicated corpora). */
   private[graft] def classifierCore(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
     docs
@@ -2615,7 +2616,7 @@ object TextQueries {
             i => struct(element_at(t, i).as("l"), element_at(t, i + 1).as("r"))))
           .otherwise(array().cast("array<struct<l:string,r:string>>"))
       }
-      // AQE-planned (round-19 revert of the round-18 noAqe experiment):
+      // AQE-planned (round-19 revert of the round-18 AQE-off sync planning):
       // the static plan fixed each round's pair-count shuffle at
       // spark.sql.shuffle.partitions tasks, so its overhead grew with
       // core count — the driver's paired runs showed the family 1.6×
@@ -3273,28 +3274,23 @@ object TextQueries {
        |FROM k ORDER BY doc_id""".stripMargin
   }
 
-  /** sortShared allowlist entry (OPTIMIZATION_r19.md): final-stage reuse
-    * under the deterministic output sort, applied ONLY where a paired
-    * 32-core A/B measured a win. */
-  private def shared(fn: Q): Q = graft.operators.Materialize.sortSharedQuery(fn)
-
   val queries: Map[String, Q] = Map(
     "q139_source_drift"       -> (q139SourceDrift _),
     "q136_unigram_segment"    -> (q136UnigramSegment _),
-    "q135_html_extract"       -> shared(q135HtmlExtract _),
+    "q135_html_extract"       -> sortSharedQuery(q135HtmlExtract _),
     "q134_nfc_normalize"      -> (q134NfcNormalize _),
     "q132_wordpiece_encode"   -> (q132WordpieceEncode _),
     "q127_bpe_encode"         -> (q127BpeEncode _),
     "q122_bpe_merges"         -> (q122BpeMerges _),
     "q109_budget_select"      -> (q109BudgetSelect _),
-    "q107_quality_classifier" -> shared(q107QualityClassifier _),
-    "q105_span_corruption"  -> shared(q105SpanCorruption _),
+    "q107_quality_classifier" -> sortSharedQuery(q107QualityClassifier _),
+    "q105_span_corruption"  -> sortSharedQuery(q105SpanCorruption _),
     "q103_symbol_filter"    -> (q103SymbolFilter _),
     "q98_encoding_filter"   -> (q98EncodingFilter _),
     "q97_chunk_overlap"     -> (q97ChunkOverlap _),
     "q85_temperature_mix"   -> (q85TemperatureMix _),
     "q91_lm_quality"        -> (q91LmQualityFilter _),
-    "q78_repetition_ratio"  -> shared(q78RepetitionRatio _),
+    "q78_repetition_ratio"  -> sortSharedQuery(q78RepetitionRatio _),
     "q80_pii_redact"        -> (q80PiiRedact _),
     "q81_source_quota"      -> (q81SourceQuota _),
     "q149_adaptive_gate"    -> (q149AdaptiveGate _),
@@ -3302,12 +3298,12 @@ object TextQueries {
     "q153_gk_gate"          -> (q153GkGate _),
     "q157_gate_stream_dual" -> (q157GateStreamDual _),
     "q158_ccnet_buckets"    -> (q158CcnetBuckets _),
-    "q159_dsir_weights"     -> shared(q159DsirWeights _),
-    "q160_gk_stream_dual"   -> shared(q160GkGateStreamDual _),
+    "q159_dsir_weights"     -> sortSharedQuery(q159DsirWeights _),
+    "q160_gk_stream_dual"   -> sortSharedQuery(q160GkGateStreamDual _),
     "q168_adaptive_gate_dual" -> (q168AdaptiveGateDual _),
     "q169_drift_dual"       -> (q169DriftDual _),
-    "q161_clf_auc"          -> shared(q161ClfAuc _),
-    "q162_gate_agreement"   -> shared(q162GateAgreement _),
+    "q161_clf_auc"          -> sortSharedQuery(q161ClfAuc _),
+    "q162_gate_agreement"   -> sortSharedQuery(q162GateAgreement _),
     "q165_calibration"      -> (q165CalibrationTable _),
     "q166_source_agreement" -> (q166SourceAgreement _),
     "q167_mixture_plan"     -> (q167MixturePlan _),
@@ -3317,7 +3313,7 @@ object TextQueries {
     "q70_feature_hash"      -> (q70FeatureHash _),
     "q71_bigram_lm"         -> (q71BigramLm _),
     "q20_text_stats"        -> (q20TextStats _),
-    "q21_text_quality"      -> shared(q21TextQuality _),
+    "q21_text_quality"      -> sortSharedQuery(q21TextQuality _),
     "q22_lang_id"           -> (q22LangId _),
     "q23_token_regex_count" -> (q23TokenRegexCount _),
     "q56_stratified_split"  -> (q56StratifiedSplit _),

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.io.{JsonArtifact, KvSink}
@@ -18,12 +17,7 @@ object E2eDemo {
     val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = java.nio.file.Files.createTempDirectory("graft_e2e").toString
     val asOf = LocalDate.parse("2026-08-12")
-    val spark = SparkSession.builder().withExtensions(new graft.GraftExtensions)
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     import spark.implicits._
     spark.sparkContext.setLogLevel("ERROR")
 

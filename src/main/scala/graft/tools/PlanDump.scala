@@ -1,28 +1,16 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for named queries — the round plan
-  * artifacts under plans/. Mirrors the Bench session conf (AQE on, UTC,
-  * shuffle partitions = cores). SPARK_GRAFT_PLANS_SORTSHARED=1
-  * additionally wraps each query the way Bench/Verify materialize it
-  * ([[graft.operators.Materialize.sortShared]]) so the round-18
-  * final-stage-sharing shape is visible in the dump. */
+  * artifacts under plans/ — in a [[graft.GraftSession]] (the session
+  * every main uses). */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val wrap = sys.env.get("SPARK_GRAFT_PLANS_SORTSHARED").contains("1")
     args.foreach { q =>
       println(s"===== $q =====")
-      val df = graft.SparkEntry.queries(q)(spark, dir)
-      (if (wrap) graft.operators.Materialize.sortShared(df) else df)
-        .explain("formatted")
+      graft.SparkEntry.queries(q)(spark, dir).explain("formatted")
     }
     spark.stop()
   }

@@ -34,13 +34,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val Array(src, out, factorS) = args.take(3)
     val factor = factorS.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scalegen")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().appName("graft-scalegen").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     generate(spark, src, out, factor)
     spark.stop()

@@ -7,7 +7,8 @@ import graft.queries.SimilarityQueries.{dot, dotHof, norm2Hof}
 
 /** SparkSessionExtensions installation (the `spark.sql.extensions=
   * graft.GraftExtensions` deployment path — SparkSuite builds its session
-  * with exactly that config string) and the VecRewrite optimizer rule. */
+  * through GraftSession, which sets exactly that config string) and the
+  * VecRewrite optimizer rule. */
 class GraftExtensionsSpec extends SparkSuite {
   import spark.implicits._
 

@@ -9,16 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one per suite via lazy val). */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = GraftSession.builder(cores = 4)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // string-form registration = the cluster deployment path; every suite
-    // exercises it (vs .withExtensions, the programmatic face)
-    .config("spark.sql.extensions", "graft.GraftExtensions")
     .getOrCreate()
 
   def sf0001 = "/root/testdata/sf0.001"
