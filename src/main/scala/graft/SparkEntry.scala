@@ -31,10 +31,14 @@ object SparkEntry {
 
   /** Drop every cached frame and persisted RDD the queries left behind,
     * checkpoint blocks included, so one query's state cannot slow the
-    * next: graph/CC queries `localCheckpoint` per-iteration frames whose
-    * blocks otherwise live until the ContextCleaner happens to GC the RDD
-    * references (74 queries × 3 reps of that produced round 5's phantom
-    * q66 = 14.2 s, 2.8 s in isolation on the same commit).
+    * next (74 queries × 3 reps of leaked blocks produced round 5's
+    * phantom q66 = 14.2 s, 2.8 s in isolation on the same commit). The
+    * loops with a per-round stop decision (the CC loops, q82, q145, BPE
+    * training) free their superseded rounds themselves
+    * ([[graft.operators.Materialize.Rounds]]) and leave only the frames
+    * their result reads; the fixed-round loops' frames and every other
+    * query's checkpoints otherwise live until the ContextCleaner happens
+    * to GC the RDD references.
     *
     * The memoized shared frames ([[GraphQueries.sharedRddIds]],
     * [[DedupQueries.sharedRddIds]]) are spared: each is the in-app

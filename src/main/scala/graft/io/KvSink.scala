@@ -3,7 +3,7 @@ package graft.io
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Zlib
+import graft.functions.Codec
 
 /** K4/K5 — the wide-row KV store sink (Bigtable in the reference; a
   * parquet KV table `key: string, payload: binary` here, the
@@ -13,7 +13,7 @@ import graft.functions.Zlib
   * taar_utils.py:110-116); payload = zlib(JSON of the full row)
   * (taar_profile_bigtable.py:322-327).
   *
-  * Scale design: the projection (sha2 + to_json + zlib_compress) is one
+  * Scale design: the projection (sha2 + to_json + payload_compress) is one
   * whole-stage-codegen map over the input — no shuffle; the write
   * parallelism is the input partitioning. Deletes are a broadcast
   * anti-join on the (small) opt-out set, rewriting only the KV table —
@@ -96,11 +96,8 @@ object KvSink {
       case c               => col(c)
     }
     val json = to_json(struct(fields: _*)).cast("binary")
-    val payload =
-      if (codec == "zlib") Zlib.compressCol(spark, json) // reference format
-      else graft.functions.Codec.compressCol(spark, json, codec)
     df.select(sha2(col(idCol).cast("string"), 256).as("key"),
-      payload.as("payload"))
+      Codec.compressCol(spark, json, codec).as("payload"))
   }
 
   /** A bare overwrite clears the live path BEFORE the new files land,
@@ -159,10 +156,7 @@ object KvSink {
     val cutoff = asOfMicros - days.toLong * 24L * 3600L * 1000000L
     recoverInterrupted(spark, kvPath)
     val kv = spark.read.parquet(kvPath)
-    val json =
-      (if (codec == "zlib") Zlib.decompressCol(spark, col("payload"))
-       else graft.functions.Codec.decompressCol(spark, col("payload"), codec))
-        .cast("string")
+    val json = Codec.decompressCol(spark, col("payload"), codec).cast("string")
     val ver = get_json_object(json, s"$$.$verField").cast("long")
     rewriteInPlace(spark, kvPath,
       kv.where(coalesce(ver >= cutoff, lit(keepUnversioned))))
@@ -303,9 +297,7 @@ object KvSink {
   /** Decode a KV payload back to JSON text (consumer side / tests). */
   def decodePayload(spark: SparkSession, kv: DataFrame,
       codec: String = "zlib"): DataFrame = {
-    val json =
-      if (codec == "zlib") Zlib.decompressCol(spark, col("payload"))
-      else graft.functions.Codec.decompressCol(spark, col("payload"), codec)
-    kv.select(col("key"), json.cast("string").as("json"))
+    kv.select(col("key"),
+      Codec.decompressCol(spark, col("payload"), codec).cast("string").as("json"))
   }
 }

@@ -2,6 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
 import graft.Tables
 import graft.io.Bucketing
@@ -211,38 +212,19 @@ object CodesIngest {
       .drop("__rn")
   }
 
+  /** Schema of the dropped embedding batches both vector tiers stream. */
+  private[jobs] val dropSchema = StructType(Seq(
+    StructField("vec_id", LongType, nullable = false),
+    StructField("embedding", ArrayType(FloatType), nullable = true)))
+
   /** STREAMING face of the incremental ingest: new embedding batches
     * landing in a drop dir flow through [[appendBatch]] via
-    * foreachBatch — the index stays searchable (and exchange-free-
-    * joinable) while it grows. Delivery is at-least-once (foreachBatch
-    * + non-transactional sink); idempotency comes from [[appendBatch]]'s
-    * ROW-level vec_id anti-join, so a replayed micro-batch appends
-    * nothing. Bounded driver (test path): processes everything
-    * available, then stops — the stop runs in a finally so a poisoned
-    * batch can't leak a live query holding the checkpoint. */
+    * [[IngestGuards.appendStream]] — the index stays searchable (and
+    * exchange-free-joinable) while it grows. Idempotency comes from
+    * [[appendBatch]]'s ROW-level vec_id anti-join, so a replayed
+    * micro-batch appends nothing. */
   def appendStreamBounded(s: SparkSession, dropGlob: String,
-      prefix: String, checkpoint: String): Unit = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vec_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("embedding",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType), nullable = true)))
-    val q = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1) // one append per dropped file
-      .parquet(dropGlob)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) appendBatch(batch.sparkSession, batch, prefix)
-      }
-      .start()
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      // the appends ran in foreachBatch's CLONED session; drop the cached
-      // relation (file listing) so readers in the outer session see them
-      s.catalog.refreshTable(s"${prefix}_codes")
-    }
-  }
+      prefix: String, checkpoint: String): Unit =
+    IngestGuards.appendStream(s, dropSchema, dropGlob, checkpoint, s"${prefix}_codes")(
+      batch => appendBatch(batch.sparkSession, batch, prefix))
 }

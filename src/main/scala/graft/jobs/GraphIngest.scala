@@ -57,6 +57,19 @@ object GraphIngest {
   def edgesTable(dir: String): String = s"${tablePrefix(dir)}_edges"
   def histTable(dir: String): String = s"${tablePrefix(dir)}_lpahist"
 
+  /** A stored per-round LPA history table read back as the
+    * [[GraphQueries.LpaRounds]] label frames (v, lab), round 1 first.
+    * EAGER checkpoints: the frames must hold their blocks before any
+    * caller can act on them — a lazy checkpoint here registers a
+    * never-computed RDD that frameLive counts as live, so a re-ingest
+    * (which DROPs this very table before rewriting it) would leave the
+    * memo serving dead frames that scan deleted files (review finding
+    * r13). Node-sized × LpaRounds rows — cheap to force. */
+  private[graft] def readHistory(s: SparkSession, table: String): Vector[DataFrame] =
+    (1 to GraphQueries.LpaRounds).map(k => s.table(table)
+      .where(col("round") === k).select(col("v"), col("lab"))
+      .localCheckpoint(true)).toVector
+
   private def metaTable(prefix: String): String = s"${prefix}_meta"
   private def pendingTable(prefix: String): String = s"${prefix}_pending"
   private def appliedTable(prefix: String): String = s"${prefix}_applied"
@@ -412,9 +425,7 @@ object GraphIngest {
       s.table(edgesT).groupBy($"u", $"v").agg(sum($"w").as("w"))
         .where($"w" > 0)
         .repartition($"u"))
-    val hist = (1 to GraphQueries.LpaRounds).map(k =>
-      s.table(histT).where($"round" === k)
-        .select($"v", $"lab").localCheckpoint(true)).toVector
+    val hist = readHistory(s, histT)
     val (patched, _) = GraphQueries.lpaAdvance(full.select($"u", $"v"), e0, hist)
     val nextT = s"${histT}__next"
     Bucketing.dropManaged(s, nextT)

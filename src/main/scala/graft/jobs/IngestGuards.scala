@@ -2,6 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.io.StagedRewrite
 
@@ -44,6 +45,36 @@ object IngestGuards {
     require(s.catalog.tableExists(table),
       s"compact needs an ingested table: $table")
     StagedRewrite.rewrite(s, table, key, buckets)(identity)
+  }
+
+  /** The bounded streaming driver shared by every family's
+    * `appendStreamBounded`: files dropped under `dropGlob` (read with
+    * the explicit `schema`, one file per trigger — one append per dropped
+    * file) flow through `append` via foreachBatch, skipping empty
+    * batches. Delivery is at-least-once (foreachBatch + a
+    * non-transactional sink), so `append` must be idempotent. It
+    * processes everything available, then stops the query in a finally,
+    * so a poisoned batch can't leak a live query holding the checkpoint,
+    * and refreshes `table`: the appends ran in foreachBatch's CLONED
+    * session, so the outer session's cached file listing must be
+    * dropped for its readers to see them. */
+  private[jobs] def appendStream(s: SparkSession, schema: StructType,
+      dropGlob: String, checkpoint: String, table: String)(
+      append: DataFrame => Unit): Unit = {
+    val q = s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(dropGlob)
+      .writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        if (!batch.isEmpty) append(batch)
+      }
+      .start()
+    try q.processAllAvailable()
+    finally {
+      q.stop()
+      s.catalog.refreshTable(table)
+    }
   }
 
   /** Intra-batch dedup with a CONFLICT fail-fast (ADVICE r14): a dirty

@@ -2,6 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.io.Bucketing
 import graft.queries.DedupQueries
@@ -136,37 +137,17 @@ object OccIngest {
   /** STREAMING face of the incremental ingest (the
     * [[CodesIngest.appendStreamBounded]] shape on the occurrence
     * table): new document batches landing in a drop dir flow through
-    * [[appendBatch]] via foreachBatch, so the dedup family's durable
-    * state grows while staying readable. Delivery is at-least-once
-    * (foreachBatch + non-transactional sink); idempotency comes from
-    * appendBatch's DOC-level anti-join, so a replayed micro-batch
-    * appends nothing. Bounded driver (test path): processes everything
-    * available, then stops in a finally so a poisoned batch can't leak
-    * a live query holding the checkpoint. */
+    * [[appendBatch]] via [[IngestGuards.appendStream]], so the dedup
+    * family's durable state grows while staying readable. Idempotency
+    * comes from appendBatch's DOC-level anti-join, so a replayed
+    * micro-batch appends nothing. */
   def appendStreamBounded(s: SparkSession, dir: String, dropGlob: String,
-      checkpoint: String): Unit = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType, nullable = true)))
-    val q = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1) // one append per dropped file
-      .parquet(dropGlob)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) appendBatch(batch.sparkSession, dir, batch)
-      }
-      .start()
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      // the appends ran in foreachBatch's CLONED session; drop the cached
-      // relation (file listing) so readers in the outer session see them
-      s.catalog.refreshTable(occTable(dir))
-    }
-  }
+      checkpoint: String): Unit =
+    IngestGuards.appendStream(s, StructType(Seq(
+        StructField("doc_id", LongType, nullable = false),
+        StructField("text", StringType, nullable = true))),
+      dropGlob, checkpoint, occTable(dir))(
+      batch => appendBatch(batch.sparkSession, dir, batch))
 
   /** DELETE documents from the persisted occurrence frame (VERDICT r14
     * item 1: GDPR takedown / licensing retraction is routine at 100 TB,

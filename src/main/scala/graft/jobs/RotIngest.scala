@@ -195,34 +195,12 @@ object RotIngest {
   /** STREAMING face of the frozen-model increment (the
     * [[CodesIngest.appendStreamBounded]] shape on the learned tier):
     * new embedding batches landing in a drop dir flow through
-    * [[appendBatch]] via foreachBatch — at-least-once delivery,
-    * idempotent through the vec_id anti-join, bounded test driver with
-    * the stop in a finally. */
+    * [[appendBatch]] via [[IngestGuards.appendStream]], idempotent
+    * through the vec_id anti-join. */
   def appendStreamBounded(s: SparkSession, dropGlob: String,
-      prefix: String, checkpoint: String): Unit = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vec_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("embedding",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType), nullable = true)))
-    val q = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1) // one append per dropped file
-      .parquet(dropGlob)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) appendBatch(batch.sparkSession, batch, prefix)
-      }
-      .start()
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      // appends ran in foreachBatch's CLONED session — refresh so the
-      // outer session's cached file listing sees them
-      s.catalog.refreshTable(s"${prefix}_codes")
-    }
-  }
+      prefix: String, checkpoint: String): Unit =
+    IngestGuards.appendStream(s, CodesIngest.dropSchema, dropGlob, checkpoint,
+      s"${prefix}_codes")(batch => appendBatch(batch.sparkSession, batch, prefix))
 
   /** Read the stored rotation back as a [[SimilarityQueries.pcaRotate]]
     * model (KB collect — d rows of d doubles). Eigenvalues are stored

@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
   * fixpoint (min node id per component) in O(diameter) iterations —
   * deterministic regardless of execution order.
   *
-  * Scale: one shuffle per iteration (join on the edge endpoint);
-  * `localCheckpoint` truncates lineage each round so plans do not grow
-  * exponentially. Near-dup graphs have tiny diameters (clusters of
+  * Scale: one shuffle per iteration (join on the edge endpoint); each
+  * round is checkpointed through [[Materialize.Rounds]], which truncates
+  * lineage so plans do not grow exponentially and frees the rounds the
+  * loop has superseded. Near-dup graphs have tiny diameters (clusters of
   * copies), so 2-4 iterations in practice; GraphX/GraphFrames' large-star
   * algorithm is the >billion-edge alternative.
   */
@@ -29,15 +30,13 @@ object ConnectedComponents {
     // union reads `pairs` twice, and without this checkpoint the whole
     // upstream pipeline (for q49, the full LSH candidate generation)
     // executes twice before the edges checkpoint even lands.
-    val p = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
-      .localCheckpoint(true)
-    val edges = p
+    val rounds = new Materialize.Rounds()
+    val p = rounds(pairs.select(col(aCol).as("u"), col(bCol).as("v")), eager = true)
+    val edges = rounds(p
       .unionByName(p.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .localCheckpoint(true)
-    var comp = edges.select(col("u").as("id")).distinct()
-      .withColumn("comp", col("id"))
-      .localCheckpoint(true)
+      .distinct(), eager = true)
+    var comp = rounds(edges.select(col("u").as("id")).distinct()
+      .withColumn("comp", col("id")), eager = true)
     var changed = true
     var iter = 0
     while (changed && iter < maxIter) {
@@ -52,16 +51,18 @@ object ConnectedComponents {
       // dozens of times. CollectMetrics aggregates exactly once per row
       // inside the same action, so the decision is identical.
       val obs = Observation()
-      val updated = comp.join(neighborMin, comp("id") === neighborMin("u"), "left_outer")
+      val updated = rounds(comp.join(neighborMin, comp("id") === neighborMin("u"), "left_outer")
         .select(comp("id"),
           least(comp("comp"), coalesce(col("ncomp"), comp("comp"))).as("comp"),
           comp("comp").as("prev"))
-        .observe(obs, count(when(col("comp") < col("prev"), true)).as("n_improved"))
-        .localCheckpoint(true)
+        .observe(obs, count(when(col("comp") < col("prev"), true)).as("n_improved")),
+        eager = true)
       changed = obs.get("n_improved").asInstanceOf[Long] > 0L
       comp = updated.select(col("id"), col("comp"))
+      rounds.settle(edges, comp)
       iter += 1
     }
+    rounds.settle(comp)
     comp
   }
 
@@ -93,19 +94,18 @@ object ConnectedComponents {
     // the fixpoint test below compares successive edge-set sizes, and
     // observing each frame's count at materialization time removes the
     // two dedicated count() jobs every iteration re-paid.
+    val rounds = new Materialize.Rounds()
     val obs0 = Observation()
-    var edges = pairs
+    var edges = rounds(pairs
       .select(greatest(col(aCol), col(bCol)).as("u"),
         least(col(aCol), col(bCol)).as("v"))
       .where(col("u") =!= col("v"))
       .distinct()
-      .observe(obs0, count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .observe(obs0, count(lit(1)).as("n")), eager = true)
     var edgeCnt = obs0.get("n").asInstanceOf[Long]
-    val nodes = edges.select(col("u").as("id"))
+    val nodes = rounds(edges.select(col("u").as("id"))
       .unionByName(edges.select(col("v").as("id")))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct(), eager = true)
 
     def largeStar(e: DataFrame): DataFrame = {
       val und = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
@@ -131,9 +131,8 @@ object ConnectedComponents {
     var converged = false
     while (!converged && iter < maxIter) {
       val obs = Observation()
-      val next = smallStar(largeStar(edges))
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
+      val next = rounds(smallStar(largeStar(edges))
+        .observe(obs, count(lit(1)).as("n")), eager = true)
       val nextCnt = obs.get("n").asInstanceOf[Long]
       // exact fixpoint test on the canonical distinct edge sets — the
       // counts come from the observed metrics (no re-scan jobs); the
@@ -143,6 +142,8 @@ object ConnectedComponents {
       converged = nextCnt == edgeCnt && next.except(edges).isEmpty
       edges = next
       edgeCnt = nextCnt
+      // the result reads the node frame and the final edge set only
+      rounds.settle(nodes, edges)
       iter += 1
     }
     // fixpoint edges are depth-1 stars root←member; roots label themselves

@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graft.GraftShim
 
 /** Materialization helpers for iterative workloads. */
@@ -108,6 +110,60 @@ object Materialize {
       : (SparkSession, String) => DataFrame =
     (s, d) => sortShared(fn(s, d))
 
+  /** The one way an iterative operator checkpoints its loop frames: one
+    * `Rounds` per operator call; `rounds(df)` checkpoints a round's frame
+    * and remembers it, `rounds.settle(keep*)` frees the superseded ones.
+    *
+    * Planning: `parts = None` is a plain AQE-planned `localCheckpoint`;
+    * `Some(n)` plans through [[checkpointPartitioned]] at the family
+    * width `n`, for frames a loop joins exchange-free on their key.
+    *
+    * Lazy or eager: a round is LAZY unless told otherwise. Lineage still
+    * truncates per round, and the first action that reads the frame (the
+    * loop's next stop-decision sync, or the caller's action after a
+    * fixed-round loop) stores its blocks, so a round costs no dedicated
+    * job. A frame is EAGER only where its own job is the point: a
+    * loop-invariant frame every round re-reads (edges, degrees, nodes),
+    * or a round whose stop metric is observed as the frame stores.
+    *
+    * Freeing: `settle(keep*)` unpersists every frame this `Rounds` made
+    * except those `keep` reads, and only once all of those have
+    * materialized (their `LogicalRDD`'s RDD `isCheckpointed`, so their
+    * lineage no longer reaches an older frame); before that it is a
+    * no-op. `keep` must name all the next round or the result reads;
+    * frames a `Rounds` did not make (memos, history, the caller's) are
+    * never touched. Loops with a stop-decision action settle right after
+    * it. Fixed-round lazy loops run no action inside the operator, so
+    * they never settle: their superseded rounds go when the
+    * ContextCleaner collects the unreachable RDDs (or at
+    * [[graft.SparkEntry.releaseQueryState]]). */
+  final class Rounds(parts: Option[Int] = None) {
+    private var made = Vector.empty[RDD[_]]
+
+    def apply(df: DataFrame, eager: Boolean = false): DataFrame = {
+      val frame = parts match {
+        case None => df.localCheckpoint(eager)
+        case n => checkpointPartitioned(df, eager, n)
+      }
+      made ++= checkpointsOf(frame)
+      frame
+    }
+
+    def settle(keep: DataFrame*): Unit = {
+      val kept = keep.flatMap(checkpointsOf)
+      if (kept.forall(_.isCheckpointed)) {
+        val ids = kept.map(_.id).toSet
+        val (live, superseded) = made.partition(r => ids(r.id))
+        superseded.foreach(_.unpersist(blocking = false))
+        made = live
+      }
+    }
+  }
+
+  /** The checkpoint RDDs a frame reads (its `LogicalRDD` leaves). */
+  private def checkpointsOf(df: DataFrame): Seq[RDD[_]] =
+    df.queryExecution.analyzed.collectLeaves().collect { case l: LogicalRDD => l.rdd }
+
   /** `localCheckpoint()` that PRESERVES the frame's hash partitioning.
     *
     * Under AQE, `Dataset.localCheckpoint` captures the adaptive plan's
@@ -123,28 +179,19 @@ object Materialize {
     * identically: it is fully resolved, so no catalog/temp-function state
     * from the original session is consulted.
     *
-    * `eager = false` still truncates lineage per call (the many-iteration
-    * requirement) but folds materialization into the next action instead
-    * of costing a dedicated job; with AQE off the partitioning is known
-    * statically, so laziness does not cost the partitioning capture.
+    * `eager = false` is a lazy checkpoint ([[Rounds]] states when a
+    * loop uses which); with AQE off the partitioning is known statically,
+    * so laziness does not cost the partitioning capture.
     *
     * `parts` (round-19, guide §2 "make partitioning scale-adaptive"):
     * because the companion plans with AQE OFF, every frame checkpointed
-    * here is otherwise frozen at `spark.sql.shuffle.partitions`
-    * (= the core count in the bench contract) partitions — and every
-    * downstream loop stage over it then schedules one task per core per
-    * round regardless of data size. The round-19 job profile shows each
-    * such stage carrying a fixed per-task cost (~0.3–0.8 s of
-    * executorRunTime per 32-way tiny task at 32 cores, GC-free;
-    * OPTIMIZATION_r19.md) that the 8-core run simply
-    * pays 4× less of — the driver's r18 paired runs measured the loop
-    * families 1.7–4× FASTER at 8 cores on identical code. Passing
-    * `parts = Some(n)` with n derived from the INPUT BYTES (the caller
-    * owns the estimate — [[graft.queries.GraphQueries.graphParts]])
-    * plans the frame at a data-proportional width instead: small inputs
-    * get few fat tasks regardless of cluster size, 100 TB inputs get
-    * the thousands of partitions their bytes demand. Co-partitioned
-    * callers must pass the SAME n for every frame of one family, or the
+    * here is otherwise frozen at `spark.sql.shuffle.partitions` (= the
+    * core count) partitions, and every downstream loop stage schedules
+    * one tiny task per core per round regardless of data size (the
+    * measured cost is on [[graft.queries.GraphQueries.graphParts]]).
+    * `Some(n)`, with n derived from the caller's INPUT BYTES, plans the
+    * frame at a data-proportional width instead. Co-partitioned callers
+    * must pass the SAME n for every frame of one family, or the
     * exchange-free loop joins re-plant exchanges. */
   def checkpointPartitioned(df: DataFrame, eager: Boolean = true,
       parts: Option[Int] = None): DataFrame = {

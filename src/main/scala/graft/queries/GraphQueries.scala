@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
-import graft.operators.Materialize.sortSharedQuery
+import graft.operators.Materialize.{Rounds, sortSharedQuery}
 
 /** Graph analytics over relational co-occurrence graphs.
   *
@@ -158,17 +158,8 @@ object GraphQueries {
 
   private def lpaHistoryMemo(s: SparkSession, dir: String,
       oldE: DataFrame): Vector[DataFrame] = histMemo.getOrBuild(s, dir) {
-    import s.implicits._
     val t = graft.jobs.GraphIngest.histTable(dir)
-    if (s.catalog.tableExists(t))
-      // EAGER checkpoint: the frames must hold their blocks before any
-      // caller can act on them — a lazy checkpoint here registers a
-      // never-computed RDD that frameLive counts as live, so a re-ingest
-      // (which DROPs this very table before rewriting it) would leave
-      // the memo serving dead frames that scan deleted files (review
-      // finding r13). Node-sized × LpaRounds rows — cheap to force.
-      (1 to LpaRounds).map(k => s.table(t).where($"round" === k)
-        .select($"v", $"lab").localCheckpoint(true)).toVector
+    if (s.catalog.tableExists(t)) graft.jobs.GraphIngest.readHistory(s, t)
     else lpaHistory(oldE)
   }
 
@@ -191,13 +182,9 @@ object GraphQueries {
   /** Yesterday's run WITH per-round history: [[LpaRounds]] label frames
     * over the old-graph edges (round 1..N), each checkpointed. */
   private[graft] def lpaHistory(oldE: DataFrame): Vector[DataFrame] = {
-    var hist = Vector.empty[DataFrame]
-    var lab = lpaInit(oldE).localCheckpoint(false)
-    for (_ <- 1 to LpaRounds) {
-      lab = lpaRound(oldE, lab).localCheckpoint(false)
-      hist :+= lab
-    }
-    hist
+    val rounds = new Rounds()
+    (1 to LpaRounds).scanLeft(rounds(lpaInit(oldE)))((lab, _) =>
+      rounds(lpaRound(oldE, lab))).tail.toVector
   }
 
   /** RDD ids of this session's LIVE memoized shared frames. A benchmark
@@ -342,24 +329,18 @@ object GraphQueries {
   def q72PagerankIters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val edges = copurchaseEdgesPartitioned(s, dir)
+    // partitioned rounds at the family width: each rank frame keeps
+    // HashPartitioning(u) (the neighbor-sum agg partitions on v; the
+    // rename-project carries it through), so iteration N+1's ranks⋈deg
+    // join is exchange-free — a bare localCheckpoint under AQE captured
+    // UnknownPartitioning and re-planted a node-sized exchange per round.
     // deg inherits HashPartitioning(u) from the edges (its agg is
-    // shuffle-free); keep that through its checkpoint so the contrib
-    // join stays exchange-free on the deg side too
-    val gp = Some(graphParts(s, dir)) // family-wide width (co-partition)
-    val deg = graft.operators.Materialize.checkpointPartitioned(
-      edges.groupBy($"u").agg(count(lit(1)).as("deg")), parts = gp)
+    // shuffle-free), so the contrib join is exchange-free on its side too.
+    val rounds = new Rounds(Some(graphParts(s, dir)))
+    val deg = rounds(edges.groupBy($"u").agg(count(lit(1)).as("deg")), eager = true)
     var ranks = deg.select($"u", lit(1.0).as("r"))
-    for (_ <- 1 to PrIters) {
-      // lazy partitioned checkpoint: lineage still truncates per round
-      // (the many-iteration requirement) with materialization folded into
-      // the next action — AND the LogicalRDD keeps HashPartitioning(u)
-      // (the neighbor-sum agg partitions on v; the rename-project carries
-      // it through), so iteration N+1's ranks⋈deg join is exchange-free.
-      // A bare localCheckpoint under AQE captured UnknownPartitioning
-      // here and silently re-planted a node-sized exchange per round.
-      ranks = graft.operators.Materialize.checkpointPartitioned(
-        prIteration(edges, deg, ranks), eager = false, parts = gp)
-    }
+    for (_ <- 1 to PrIters)
+      ranks = rounds(prIteration(edges, deg, ranks))
     ranks.select($"u".as("l_partkey"), $"r".as("rank")).orderBy($"l_partkey")
   }
 
@@ -532,26 +513,24 @@ object GraphQueries {
     * ([[copurchaseEdgesPartitioned]]) so each round shuffles only the
     * frontier (which the anti-join keeps to NEWLY reached nodes — the
     * delta, not the closure; the classic BFS-on-MapReduce optimization).
-    * Frontier and visited sets are node-sized. Checkpoints are LAZY:
-    * the hop count is fixed (no per-round stop decision), so the whole
-    * loop is ONE action — each round's frontier/levels blocks cache at
-    * first compute and their double consumers read the cache, instead of
-    * 2 dedicated materialization jobs per round (round-6 change; a
-    * convergence-driven BFS would flip to q82's eager-per-segment form). */
+    * Frontier and visited sets are node-sized. The hop count is fixed
+    * (no per-round stop decision), so the whole loop is ONE action: each
+    * round's frontier/levels blocks cache at first compute and their
+    * double consumers read the cache. */
   def q79BfsHops(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val edges = copurchaseEdgesPartitioned(s, dir)
     val seeds = edges.select($"u").where($"u" < BfsSeedMax).distinct()
       .withColumn("hop", lit(0L))
-    var levels = seeds.localCheckpoint(false)
+    val rounds = new Rounds()
+    var levels = rounds(seeds)
     var frontier = levels
     for (h <- 1 to BfsHops) {
-      frontier = edges.join(frontier.select($"u"), Seq("u"))
+      frontier = rounds(edges.join(frontier.select($"u"), Seq("u"))
         .select($"v".as("u")).distinct()
         .join(levels.select($"u"), Seq("u"), "left_anti")
-        .withColumn("hop", lit(h.toLong))
-        .localCheckpoint(false)
-      levels = levels.union(frontier).localCheckpoint(false)
+        .withColumn("hop", lit(h.toLong)))
+      levels = rounds(levels.union(frontier))
     }
     levels.select($"u".as("l_partkey"), $"hop").orderBy($"l_partkey")
   }
@@ -601,16 +580,14 @@ object GraphQueries {
     * part of the operator.
     *
     * Scale design is q72's (edges materialized once partitioned on `u`,
-    * per-round lazy partitioned checkpoints keep every iteration at one
-    * node-sized exchange). The ONLY addition is the convergence test,
-    * batched every [[PrCheckEvery]] rounds: the segment's intermediate
-    * rank frames are LAZY checkpoints (lineage truncates, blocks cache
-    * on first compute, no dedicated job), the per-node adjacent delta of
-    * the segment's final two vectors rides the segment frame through an
+    * partitioned rounds keep every iteration at one node-sized
+    * exchange). The ONLY addition is the convergence test, batched every
+    * [[PrCheckEvery]] rounds: the per-node adjacent delta of the
+    * segment's final two vectors rides the segment frame through an
     * exchange-free join (everything is HashPartitioning(u)), and the
     * 1-row max the driver syncs on is itself the action that
-    * materializes the segment frame's blocks (lazy checkpoint — one
-    * driver round-trip per segment, not two).
+    * materializes the segment's frames (one driver round-trip per
+    * segment, not two).
     * A convergence loop cannot avoid that driver round-trip — the stop
     * decision gates job submission — but it CAN amortize it: each test
     * costs a full replan + driver sync, so testing every round doubles
@@ -626,31 +603,24 @@ object GraphQueries {
   def q82PagerankConverge(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val edges = copurchaseEdgesPartitioned(s, dir)
-    val gp = Some(graphParts(s, dir)) // family-wide width (co-partition)
-    val deg = graft.operators.Materialize.checkpointPartitioned(
-      edges.groupBy($"u").agg(count(lit(1)).as("deg")), parts = gp)
+    val rounds = new Rounds(Some(graphParts(s, dir)))
+    val deg = rounds(edges.groupBy($"u").agg(count(lit(1)).as("deg")), eager = true)
     var ranks = deg.select($"u", lit(1.0).as("r"))
     var iters = 0
     var delta = Double.MaxValue
     while (iters < PrMaxIters && delta >= PrEps) {
       // a segment of CheckEvery iterations planned as one unit; only the
       // second-to-last frame is double-consumed (by the last iteration
-      // and the delta join), and its lazy checkpoint makes both readers
-      // share one computation
+      // and the delta join), and its checkpoint makes both readers share
+      // one computation
       var cur = ranks
       for (_ <- 1 until PrCheckEvery)
-        cur = graft.operators.Materialize.checkpointPartitioned(
-          prIteration(edges, deg, cur), eager = false, parts = gp)
-      // LAZY (round-19): the 1-row max sync below is the action that
-      // materializes this segment frame's blocks — an eager checkpoint
-      // here cost a dedicated job per segment on top of the sync job
-      // (2 driver round-trips per segment instead of 1); the delta agg
-      // reads the frame as it stores, and `ranks` re-reads the blocks
-      val next = graft.operators.Materialize.checkpointPartitioned(
-        prIteration(edges, deg, cur).as("n")
-          .join(cur.select($"u", $"r".as("r_prev")), "u")
-          .select($"u", $"r", abs($"r" - $"r_prev").as("dr")),
-        eager = false, parts = gp)
+        cur = rounds(prIteration(edges, deg, cur))
+      // the delta agg below reads this frame as it stores, and `ranks`
+      // re-reads the blocks
+      val next = rounds(prIteration(edges, deg, cur).as("n")
+        .join(cur.select($"u", $"r".as("r_prev")), "u")
+        .select($"u", $"r", abs($"r" - $"r_prev").as("dr")))
       // AQE-planned (round-19 revert of the round-18 AQE-off sync planning —
       // same rationale as bpeTrain's top-pair collect: the static plan's
       // per-sync cost scales with the core count; the driver's paired
@@ -658,8 +628,10 @@ object GraphQueries {
       // than at 8, where the r17 AQE-planned sync scaled fine)
       delta = next.agg(max($"dr")).head.getDouble(0)
       ranks = next.select($"u", $"r")
+      rounds.settle(deg, ranks)
       iters += PrCheckEvery
     }
+    rounds.settle(ranks)
     ranks.select($"u".as("l_partkey"), $"r".as("rank"),
         lit(iters.toLong).as("n_iters"),
         lit(delta < PrEps).as("converged"),
@@ -749,8 +721,8 @@ object GraphQueries {
   /** q140 core over any mirrored (u, v) edge frame — spec entry.
     *
     * Round-18 measured negative result, recorded so it is not re-tried:
-    * switching these bare lazy localCheckpoints to the q72/q82
-    * `checkpointPartitioned` (to keep HashPartitioning(v) and drop the
+    * switching these frames to the q72/q82 partitioned rounds
+    * (`Rounds(Some(n))`, to keep HashPartitioning(v) and drop the
     * label-side exchange of each round's join) made the family 10–30%
     * SLOWER in a same-session A/B at sf0.1 (q140 3.74→4.50,
     * q146 7.43→9.70): each round's plan is then fixed at the static
@@ -766,11 +738,10 @@ object GraphQueries {
 
   /** [[lpaCore]] without the q140 output sort: the (v, lab) label frame
     * itself, for consumers that keep computing on it (q141). */
-  private[graft] def labeledCore(edges: DataFrame, rounds: Int): DataFrame = {
-    var labels = lpaInit(edges).localCheckpoint(false)
-    for (_ <- 1 to rounds)
-      labels = lpaRound(edges, labels).localCheckpoint(false)
-    labels
+  private[graft] def labeledCore(edges: DataFrame, n: Int): DataFrame = {
+    val rounds = new Rounds()
+    (1 to n).foldLeft(rounds(lpaInit(edges)))((labels, _) =>
+      rounds(lpaRound(edges, labels)))
   }
 
   /** The n1/l1..nN/lN synchronous-round CTEs over an edge CTE named
@@ -843,14 +814,15 @@ object GraphQueries {
     * oscillation fixture drives it directly). */
   private[graft] def lpaConvergeCore(edges: DataFrame): DataFrame = {
     import edges.sparkSession.implicits._
-    var labels = lpaInit(edges).localCheckpoint(false)
+    val frames = new Rounds()
+    var labels = frames(lpaInit(edges))
     var rounds = 0
     var d1 = -1L // labels changed vs previous round
     var d2 = -1L // labels changed vs two rounds ago
     while (rounds < LpaMaxRounds && d1 != 0 && d2 != 0) {
       val lm2 = labels // segment start = round k−2 (LpaCheckEvery = 2)
-      val lm1 = lpaRound(edges, lm2).localCheckpoint(false)
-      labels = lpaRound(edges, lm1).localCheckpoint(false)
+      val lm1 = frames(lpaRound(edges, lm2))
+      labels = frames(lpaRound(edges, lm1))
       // both stop deltas in ONE action: 3-frame join, all sides
       // HashPartitioning(v), 1-row aggregate to the driver
       // stays AQE-planned (round-18 A/B): unlike q82's sync (an AQE-off win at the time),
@@ -864,6 +836,7 @@ object GraphQueries {
           sum(when($"lab" =!= $"lab2", 1L).otherwise(0L)).as("d2"))
         .head()
       d1 = row.getLong(0); d2 = row.getLong(1)
+      frames.settle(labels)
       rounds += LpaCheckEvery
     }
     labels.select($"v".as("l_partkey"), $"lab".as("community"),
@@ -1061,15 +1034,16 @@ object GraphQueries {
   private[graft] def lpaAdvance(full: DataFrame, e0In: DataFrame,
       hist: Vector[DataFrame]): (Vector[DataFrame], DataFrame) = {
     import full.sparkSession.implicits._
-    val e0 = e0In.localCheckpoint(false)
+    val rounds = new Rounds()
+    val e0 = rounds(e0In)
     var patched = Vector.empty[DataFrame]
     var delta: DataFrame = null
     for (k <- 1 to LpaRounds) {
-      val cand = (if (delta == null) e0
+      val cand = rounds(if (delta == null) e0
         else e0.unionByName(delta.select($"v"))
           .unionByName(full.join(delta.select($"v".as("u")).hint("shuffle_hash"),
             Seq("u")).select($"v"))
-          .distinct()).localCheckpoint(false)
+          .distinct())
       // yesterday's round-(k−1) labels patched with delta_{k−1}; round 0
       // is the identity labeling, which needs no stored frame. A node
       // absent from yesterday's frames (all its edges are new) is in E₀
@@ -1098,11 +1072,10 @@ object GraphQueries {
         .groupBy($"v")
         .agg(max(struct($"cnt", (-$"lab").as("nl"))).as("m"))
         .select($"v", (-$"m.nl").as("lab"))
-      delta = newlab
+      delta = rounds(newlab
         .join(hist(k - 1).select($"v", $"lab".as("olab")), Seq("v"), "left")
         .where(!($"olab" <=> $"lab"))
-        .select($"v", $"lab")
-        .localCheckpoint(false)
+        .select($"v", $"lab"))
       patched :+= hist(k - 1)
         .join(delta.select($"v", $"lab".as("dlab")), Seq("v"), "full_outer")
         .select($"v", coalesce($"dlab", $"lab").as("lab"))
@@ -1150,14 +1123,14 @@ object GraphQueries {
   private[graft] def weightedPathsCore(wedges: DataFrame, seedMax: Long,
       rounds: Int): DataFrame = {
     import wedges.sparkSession.implicits._
-    var dist = wedges.select($"u").where($"u" < seedMax).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(false)
+    val frames = new Rounds()
+    var dist = frames(wedges.select($"u").where($"u" < seedMax).distinct()
+      .withColumn("dist", lit(0L)))
     for (_ <- 1 to rounds) {
       val relax = wedges.join(dist.hint("shuffle_hash"), Seq("u"))
         .select($"v".as("u"), ($"dist" + $"w").as("dist"))
-      dist = dist.unionByName(relax)
-        .groupBy($"u").agg(min($"dist").as("dist"))
-        .localCheckpoint(false)
+      dist = frames(dist.unionByName(relax)
+        .groupBy($"u").agg(min($"dist").as("dist")))
     }
     dist.select($"u".as("l_partkey"), $"dist").orderBy($"l_partkey")
   }

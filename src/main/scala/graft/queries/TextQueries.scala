@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.Materialize.sortSharedQuery
+import graft.operators.Materialize.{Rounds, sortSharedQuery}
 
 /** Text-analysis operators for a large-scale training-data pipeline:
   * token statistics, quality scoring, language ID (n-gram/stopword
@@ -2567,7 +2567,7 @@ object TextQueries {
     * 100 TB, not corpus-sized. Each round is one partial-aggregated
     * pair-count over that table plus a map-only replace; the single-row
     * top-pair collect per round is the q72/q82 driver-sync precedent,
-    * and `localCheckpoint` keeps the 20-round lineage flat. */
+    * and per-round checkpoints keep the 20-round lineage flat. */
   def q122BpeMerges(s: SparkSession, dir: String): DataFrame =
     bpeMergesCore(s, Tables.documents(s, dir), BpeMerges)
 
@@ -2591,20 +2591,15 @@ object TextQueries {
       .select(explode(split($"text", " ")).as("word"))
       .where($"word" =!= "" && !$"word".contains(sep))
       .groupBy($"word").agg(count(lit(1)).as("freq"))
-    // LAZY checkpoints through the whole training loop (round-18, the
-    // q79/q82 pattern): each round's top-pair collect is the action that
-    // materializes that round's state blocks — an eager checkpoint here
-    // and per round cost a dedicated materialization job each (2 jobs
-    // per merge round instead of 1; ~40 extra jobs per training run at
-    // BpeMerges=20, re-paid by q127's encode). Lineage still truncates
-    // per round, and round k's collect finds round k−1's blocks already
-    // materialized, so the pending-checkpoint chain never exceeds depth 1.
-    var cur = vocab.select($"word", $"freq",
+    // each round's top-pair collect is the action that stores that
+    // round's state frame, so the pending-checkpoint chain never exceeds
+    // depth 1 and the frame before it can go
+    val rounds = new Rounds()
+    var cur = rounds(vocab.select($"word", $"freq",
       concat(lit(sep),
         concat_ws(sep + sep,
           transform(sequence(lit(1), length($"word")), i => $"word".substr(i, lit(1)))),
-        lit(sep)).as("s"))
-      .localCheckpoint(false)
+        lit(sep)).as("s")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var k = 1
     var exhausted = false
@@ -2627,13 +2622,13 @@ object TextQueries {
           .groupBy($"p.l".as("l"), $"p.r".as("r")).agg(sum($"freq").as("cnt"))
           .orderBy($"cnt".desc, $"l".asc, $"r".asc)
           .limit(1).collect()
+      rounds.settle(cur)
       if (top.isEmpty) exhausted = true
       else {
         val (l, r, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((k, l, r, cnt))
-        cur = cur.withColumn("s", call_function("replace", $"s",
-            lit(sep + l + sep + sep + r + sep), lit(sep + l + r + sep)))
-          .localCheckpoint(false)
+        cur = rounds(cur.withColumn("s", call_function("replace", $"s",
+            lit(sep + l + sep + sep + r + sep), lit(sep + l + r + sep))))
         k += 1
       }
     }

@@ -66,6 +66,11 @@ class CodecSpec extends SparkSuite {
     assert(defaultKv.collect().map(_.getAs[Array[Byte]]("payload")).zip(
       viaZlib.collect().map(_.getAs[Array[Byte]]("payload")))
       .forall { case (a, b) => java.util.Arrays.equals(a, b) })
+    // ... and its bytes are plain RFC 1950 zlib, the reference's wire format
+    val json = defaultKv.collect().map(r => new String(
+      graft.functions.Zlib.decompress(r.getAs[Array[Byte]]("payload")), "UTF-8"))
+    assert(Seq("alice", "bob").forall(n => json.exists(_.contains(s"\"name\":\"$n\""))),
+      json.mkString(" | "))
   }
 
   test("unknown codec is rejected at construction") {
