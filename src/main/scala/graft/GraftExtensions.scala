@@ -1,16 +1,19 @@
 package graft
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 import graft.functions.{Codec, DotProduct, HtmlText, UnigramSegment, IntSqDist, Md5Prefix64, NfcNormalize, Norm2, PayloadCompress, PayloadDecompress, SignedHadamard, SortedIntersectCount, VecAggMax, VecAggMin, VecAggSumDouble, VecAggSumLong, WinnowGrams, WordpieceEncode, ZlibCompress, ZlibDecompress}
 
-/** Session extension entry point — the deployment-shaped way to install
-  * this library's native expressions and optimizer rules on a cluster:
+/** Session extension entry point — the one place that installs this
+  * library's native functions and planner rules on a session:
   *
   * {{{
   *   spark.sql.extensions=graft.GraftExtensions
@@ -20,88 +23,70 @@ import graft.functions.{Codec, DotProduct, HtmlText, UnigramSegment, IntSqDist, 
   * suites), or programmatically `withExtensions(new GraftExtensions)` on
   * a session builder. Installs:
   *
-  *  - the native functions (`vec_dot`, `vec_norm2`, `md5_prefix64`,
-  *    `zlib_compress`, `zlib_decompress`, `payload_compress`,
-  *    `payload_decompress`) as session-registry functions —
-  *    available to `spark.sql` text and `call_function` without any
-  *    per-query temp registration;
+  *  - the 19 functions of [[GraftExtensions.functions]] as
+  *    session-registry functions, available to `spark.sql` text and to
+  *    `call_function` (the column helpers in `graft.functions`):
+  *    vector math (`vec_dot`, `vec_norm2`, `vec_isqd`, `vec_hadamard`,
+  *    `vec_icount`), elementwise array aggregates (`vec_agg_sum_l`,
+  *    `vec_agg_sum_d`, `vec_agg_min`, `vec_agg_max`), hashing and text
+  *    (`md5_prefix64`, `winnow_grams`, `nfc_normalize`, `html_text`,
+  *    `unigram_segment`, `wordpiece_encode`) and payload codecs
+  *    (`zlib_compress`, `zlib_decompress`, `payload_compress`,
+  *    `payload_decompress`);
   *  - [[VecRewrite]], an optimizer rule that rewrites the declarative
   *    higher-order-function formulations of dot product and squared norm
-  *    into the codegen expressions.
+  *    into the codegen expressions;
+  *  - [[graft.plans.PrefixSumStrategy]], the planner strategy for the
+  *    prefix-sum operator (q65, q108).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("vec_norm2"),
-      new ExpressionInfo(classOf[Norm2].getName, "vec_norm2"),
-      (exprs: Seq[Expression]) => Norm2(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("vec_isqd"),
-      new ExpressionInfo(classOf[IntSqDist].getName, "vec_isqd"),
-      (exprs: Seq[Expression]) => IntSqDist(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("vec_hadamard"),
-      new ExpressionInfo(classOf[SignedHadamard].getName, "vec_hadamard"),
-      (exprs: Seq[Expression]) => SignedHadamard(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("vec_icount"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, "vec_icount"),
-      (exprs: Seq[Expression]) => SortedIntersectCount(exprs(0), exprs(1))))
-    // elementwise array aggregates (bare AggregateFunction builders — the
-    // analyzer wraps them, the registry convention for built-in aggregates)
-    ext.injectFunction((FunctionIdentifier("vec_agg_sum_l"),
-      new ExpressionInfo(classOf[VecAggSumLong].getName, "vec_agg_sum_l"),
-      (exprs: Seq[Expression]) => VecAggSumLong(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("vec_agg_sum_d"),
-      new ExpressionInfo(classOf[VecAggSumDouble].getName, "vec_agg_sum_d"),
-      (exprs: Seq[Expression]) => VecAggSumDouble(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("vec_agg_min"),
-      new ExpressionInfo(classOf[VecAggMin].getName, "vec_agg_min"),
-      (exprs: Seq[Expression]) => VecAggMin(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("vec_agg_max"),
-      new ExpressionInfo(classOf[VecAggMax].getName, "vec_agg_max"),
-      (exprs: Seq[Expression]) => VecAggMax(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("md5_prefix64"),
-      new ExpressionInfo(classOf[Md5Prefix64].getName, "md5_prefix64"),
-      (exprs: Seq[Expression]) => Md5Prefix64(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue())))
-    ext.injectFunction((FunctionIdentifier("winnow_grams"),
-      new ExpressionInfo(classOf[WinnowGrams].getName, "winnow_grams"),
-      (exprs: Seq[Expression]) => WinnowGrams(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue(),
-        exprs(2).eval(null).asInstanceOf[Number].intValue())))
-    ext.injectFunction((FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (exprs: Seq[Expression]) => NfcNormalize(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("html_text"),
-      new ExpressionInfo(classOf[HtmlText].getName, "html_text"),
-      (exprs: Seq[Expression]) => HtmlText(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("unigram_segment"),
-      new ExpressionInfo(classOf[UnigramSegment].getName, "unigram_segment"),
-      (exprs: Seq[Expression]) => UnigramSegment.fromExprs(exprs)))
-    ext.injectFunction((FunctionIdentifier("wordpiece_encode"),
-      new ExpressionInfo(classOf[WordpieceEncode].getName, "wordpiece_encode"),
-      (exprs: Seq[Expression]) => {
-        val arr = exprs(1).eval(null)
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-        WordpieceEncode(exprs.head,
-          (0 until arr.numElements()).map(j => arr.getUTF8String(j).toString))
-      }))
-    ext.injectFunction((FunctionIdentifier("zlib_compress"),
-      new ExpressionInfo(classOf[ZlibCompress].getName, "zlib_compress"),
-      (exprs: Seq[Expression]) => ZlibCompress(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("zlib_decompress"),
-      new ExpressionInfo(classOf[ZlibDecompress].getName, "zlib_decompress"),
-      (exprs: Seq[Expression]) => ZlibDecompress(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("payload_compress"),
-      new ExpressionInfo(classOf[PayloadCompress].getName, "payload_compress"),
-      (exprs: Seq[Expression]) => PayloadCompress(exprs.head, Codec.codecArg(exprs(1)))))
-    ext.injectFunction((FunctionIdentifier("payload_decompress"),
-      new ExpressionInfo(classOf[PayloadDecompress].getName, "payload_decompress"),
-      (exprs: Seq[Expression]) => PayloadDecompress(exprs.head, Codec.codecArg(exprs(1)))))
+    GraftExtensions.functions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => VecRewrite)
     ext.injectPlannerStrategy(_ => graft.plans.PrefixSumStrategy)
   }
+}
+
+object GraftExtensions {
+
+  private def fn[T <: Expression: ClassTag](name: String)(
+      build: Seq[Expression] => T): SparkSessionExtensions#FunctionDescription =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(implicitly[ClassTag[T]].runtimeClass.getName, name), build)
+
+  /** A literal integer argument (a nibble count, a gram or window size). */
+  private def intArg(e: Expression): Int = e.eval(null).asInstanceOf[Number].intValue()
+
+  /** Every graft SQL function: its name and its builder. Literal
+    * arguments are decoded here, or by the expression's companion where
+    * the decoding needs checks of its own (`UnigramSegment.fromExprs`,
+    * `Codec.codecArg`). The aggregates are bare `AggregateFunction`
+    * builders, the registry convention for built-in aggregates: the
+    * analyzer wraps them in `AggregateExpression` itself. */
+  val functions: Seq[SparkSessionExtensions#FunctionDescription] = Seq(
+    fn("vec_dot")(e => DotProduct(e(0), e(1))),
+    fn("vec_norm2")(e => Norm2(e.head)),
+    fn("vec_isqd")(e => IntSqDist(e(0), e(1))),
+    fn("vec_hadamard")(e => SignedHadamard(e.head)),
+    fn("vec_icount")(e => SortedIntersectCount(e(0), e(1))),
+    fn("vec_agg_sum_l")(e => VecAggSumLong(e.head)),
+    fn("vec_agg_sum_d")(e => VecAggSumDouble(e.head)),
+    fn("vec_agg_min")(e => VecAggMin(e.head)),
+    fn("vec_agg_max")(e => VecAggMax(e.head)),
+    fn("md5_prefix64")(e => Md5Prefix64(e.head, intArg(e(1)))),
+    fn("winnow_grams")(e => WinnowGrams(e.head, intArg(e(1)), intArg(e(2)))),
+    fn("nfc_normalize")(e => NfcNormalize(e.head)),
+    fn("html_text")(e => HtmlText(e.head)),
+    fn("unigram_segment")(UnigramSegment.fromExprs),
+    fn("wordpiece_encode") { e =>
+      val vocab = e(1).eval(null).asInstanceOf[ArrayData]
+      WordpieceEncode(e.head, (0 until vocab.numElements()).map(vocab.getUTF8String(_).toString))
+    },
+    fn("zlib_compress")(e => ZlibCompress(e.head)),
+    fn("zlib_decompress")(e => ZlibDecompress(e.head)),
+    fn("payload_compress")(e => PayloadCompress(e.head, Codec.codecArg(e(1)))),
+    fn("payload_decompress")(e => PayloadDecompress(e.head, Codec.codecArg(e(1)))))
 }
 
 /** Rewrites interpreted higher-order-function vector math into the native

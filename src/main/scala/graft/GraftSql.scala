@@ -2,25 +2,23 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** SQL-text surface: register the testdata tables as temp views (plus the
-  * zlib functions) and run queries as ANSI SQL through Catalyst's parser —
-  * the `spark.sql(...)` face of the same engine. Every DataFrame operator
-  * in this library has an equivalent here because both lower to the same
-  * logical plans.
+/** SQL-text surface: register the testdata tables as temp views and run
+  * queries as ANSI SQL through Catalyst's parser — the `spark.sql(...)`
+  * face of the same engine. Every DataFrame operator in this library has
+  * an equivalent here because both lower to the same logical plans; the
+  * graft functions (`vec_dot`, `md5_prefix64`, `zlib_compress`, ...) are
+  * the ones [[GraftExtensions]] installs at session build.
   */
 object GraftSql {
 
   /** Register every table in `sfDir` as a temp view named as in
-    * TESTDATA.md, and the custom functions. */
-  def register(spark: SparkSession, sfDir: String): Unit = {
+    * TESTDATA.md. */
+  def register(s: SparkSession, sfDir: String): Unit = {
     Tables.names.foreach { n =>
-      val df = if (n == "events") Tables.events(spark, sfDir)
-               else Tables.table(spark, sfDir, n)
+      val df = if (n == "events") Tables.events(s, sfDir)
+               else Tables.table(s, sfDir, n)
       df.createOrReplaceTempView(n)
     }
-    graft.functions.Zlib.register(spark)
-    graft.functions.Vec.register(spark)
-    graft.functions.Md5Prefix64.register(spark)
   }
 
   def sql(spark: SparkSession, sfDir: String, query: String): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType}
@@ -99,34 +99,17 @@ object Codec {
     out.toByteArray
   }
 
-  /** Idempotent SQL registration: `payload_compress(bin, 'zstd')` etc.
-    * (also injected session-wide by [[graft.GraftExtensions]]). */
-  def register(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("payload_compress")))
-      reg.createOrReplaceTempFunction("payload_compress",
-        exprs => PayloadCompress(exprs.head, Codec.codecArg(exprs(1))), "built-in")
-    if (!reg.functionExists(FunctionIdentifier("payload_decompress")))
-      reg.createOrReplaceTempFunction("payload_decompress",
-        exprs => PayloadDecompress(exprs.head, Codec.codecArg(exprs(1))), "built-in")
-  }
-
   /** The codec argument must be a foldable string (a literal in SQL). */
   def codecArg(e: Expression): String = {
     Predef.require(e.foldable, "payload codec must be a literal string")
     String.valueOf(e.eval(null))
   }
 
-  def compressCol(spark: SparkSession, c: Column, codec: String): Column = {
-    register(spark)
+  def compressCol(c: Column, codec: String): Column =
     org.apache.spark.sql.functions.call_function("payload_compress", c,
       org.apache.spark.sql.functions.lit(codec))
-  }
 
-  def decompressCol(spark: SparkSession, c: Column, codec: String): Column = {
-    register(spark)
+  def decompressCol(c: Column, codec: String): Column =
     org.apache.spark.sql.functions.call_function("payload_decompress", c,
       org.apache.spark.sql.functions.lit(codec))
-  }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -181,16 +181,6 @@ object HtmlText {
     out.toString
   }
 
-  def register(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("html_text")))
-      reg.createOrReplaceTempFunction(
-        "html_text", exprs => HtmlText(exprs.head), "built-in")
-  }
-
-  def apply(spark: SparkSession, c: Column): Column = {
-    register(spark)
+  def apply(c: Column): Column =
     org.apache.spark.sql.functions.call_function("html_text", c)
-  }
 }

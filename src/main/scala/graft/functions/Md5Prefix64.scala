@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
@@ -58,20 +58,7 @@ object Md5Prefix64 {
     v
   }
 
-  /** Idempotent: a no-op when already installed (by
-    * [[graft.GraftExtensions]] at session build, or by a prior call). */
-  def register(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("md5_prefix64")))
-      reg.createOrReplaceTempFunction(
-        "md5_prefix64", exprs => Md5Prefix64(exprs.head,
-          exprs(1).eval(null).asInstanceOf[Number].intValue()), "built-in")
-  }
-
-  def apply(spark: SparkSession, c: Column, nibbles: Int): Column = {
-    register(spark)
+  def apply(c: Column, nibbles: Int): Column =
     org.apache.spark.sql.functions.call_function("md5_prefix64",
       c, org.apache.spark.sql.functions.lit(nibbles))
-  }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -50,16 +50,6 @@ object NfcNormalize {
       java.text.Normalizer.normalize(s.toString, java.text.Normalizer.Form.NFC))
   }
 
-  def register(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("nfc_normalize")))
-      reg.createOrReplaceTempFunction(
-        "nfc_normalize", exprs => NfcNormalize(exprs.head), "built-in")
-  }
-
-  def apply(spark: SparkSession, c: Column): Column = {
-    register(spark)
+  def apply(c: Column): Column =
     org.apache.spark.sql.functions.call_function("nfc_normalize", c)
-  }
 }

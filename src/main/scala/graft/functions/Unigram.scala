@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -144,8 +144,8 @@ object UnigramSegment {
     else new GenericInternalRow(Array[Any](cost(n).toLong, fsum(n)))
   }
 
-  /** Shared SQL-surface builder (used by both the extensions injection
-    * and [[register]] — previously duplicated verbatim): checks arity
+  /** The `unigram_segment(word, pieces array<string>, freqs
+    * array<bigint>)` builder [[graft.GraftExtensions]] installs: checks arity
     * and foldability up front and reads the freq array through its
     * DECLARED element type — `array(3, 9, 1)` without L suffixes
     * arrives as array<int>, which `getLong` would fail on with an
@@ -180,20 +180,8 @@ object UnigramSegment {
         (ps.getUTF8String(j).toString, freqOf(j))))
   }
 
-  /** Idempotent SQL-surface registration: args are (word, pieces
-    * array<string> literal, freqs array<bigint> literal). */
-  def register(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("unigram_segment")))
-      reg.createOrReplaceTempFunction(
-        "unigram_segment", fromExprs, "built-in")
-  }
-
-  def apply(spark: SparkSession, c: Column, vocab: Seq[(String, Long)]): Column = {
-    register(spark)
+  def apply(c: Column, vocab: Seq[(String, Long)]): Column =
     org.apache.spark.sql.functions.call_function("unigram_segment", c,
       org.apache.spark.sql.functions.typedLit(vocab.map(_._1)),
       org.apache.spark.sql.functions.typedLit(vocab.map(_._2)))
-  }
 }

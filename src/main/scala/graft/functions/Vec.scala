@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -291,50 +291,18 @@ object Vec {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(v)
   }
 
-  /** Idempotent: a no-op when the function already exists (installed by
-    * [[graft.GraftExtensions]] at session build, or by a prior call). */
-  def register(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("vec_dot")))
-      reg.createOrReplaceTempFunction(
-        "vec_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    if (!reg.functionExists(FunctionIdentifier("vec_norm2")))
-      reg.createOrReplaceTempFunction(
-        "vec_norm2", exprs => Norm2(exprs.head), "built-in")
-    if (!reg.functionExists(FunctionIdentifier("vec_isqd")))
-      reg.createOrReplaceTempFunction(
-        "vec_isqd", exprs => IntSqDist(exprs(0), exprs(1)), "built-in")
-    if (!reg.functionExists(FunctionIdentifier("vec_hadamard")))
-      reg.createOrReplaceTempFunction(
-        "vec_hadamard", exprs => SignedHadamard(exprs.head), "built-in")
-    if (!reg.functionExists(FunctionIdentifier("vec_icount")))
-      reg.createOrReplaceTempFunction(
-        "vec_icount", exprs => SortedIntersectCount(exprs(0), exprs(1)), "built-in")
-  }
-
-  def dotCol(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+  def dotCol(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("vec_dot", a, b)
-  }
 
-  def norm2Col(spark: SparkSession, a: Column): Column = {
-    register(spark)
+  def norm2Col(a: Column): Column =
     org.apache.spark.sql.functions.call_function("vec_norm2", a)
-  }
 
-  def isqdCol(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+  def isqdCol(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("vec_isqd", a, b)
-  }
 
-  def hadamardCol(spark: SparkSession, a: Column): Column = {
-    register(spark)
+  def hadamardCol(a: Column): Column =
     org.apache.spark.sql.functions.call_function("vec_hadamard", a)
-  }
 
-  def icountCol(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+  def icountCol(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("vec_icount", a, b)
-  }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -241,36 +241,12 @@ case class VecAggMax(
 }
 
 object VecAgg {
-  /** Idempotent session registration (the [[Vec.register]] pattern). */
-  def register(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val reg = spark.sessionState.functionRegistry
-    def put(name: String, f: Seq[Expression] => Expression): Unit =
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, f, "built-in")
-    // bare AggregateFunction builders, the FunctionRegistry convention
-    // for built-in aggregates — the analyzer wraps them in
-    // AggregateExpression (and handles DISTINCT/FILTER) itself
-    put("vec_agg_sum_l", exprs => VecAggSumLong(exprs.head))
-    put("vec_agg_sum_d", exprs => VecAggSumDouble(exprs.head))
-    put("vec_agg_min", exprs => VecAggMin(exprs.head))
-    put("vec_agg_max", exprs => VecAggMax(exprs.head))
-  }
-
-  def sumLCol(spark: SparkSession, a: Column): Column = {
-    register(spark)
+  def sumLCol(a: Column): Column =
     org.apache.spark.sql.functions.call_function("vec_agg_sum_l", a)
-  }
-  def sumDCol(spark: SparkSession, a: Column): Column = {
-    register(spark)
+  def sumDCol(a: Column): Column =
     org.apache.spark.sql.functions.call_function("vec_agg_sum_d", a)
-  }
-  def minCol(spark: SparkSession, a: Column): Column = {
-    register(spark)
+  def minCol(a: Column): Column =
     org.apache.spark.sql.functions.call_function("vec_agg_min", a)
-  }
-  def maxCol(spark: SparkSession, a: Column): Column = {
-    register(spark)
+  def maxCol(a: Column): Column =
     org.apache.spark.sql.functions.call_function("vec_agg_max", a)
-  }
 }

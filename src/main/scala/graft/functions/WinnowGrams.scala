@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -133,21 +133,8 @@ object WinnowGrams {
     new GenericArrayData(arr)
   }
 
-  /** Idempotent SQL-surface registration (the md5_prefix64 pattern). */
-  def register(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("winnow_grams")))
-      reg.createOrReplaceTempFunction(
-        "winnow_grams", exprs => WinnowGrams(exprs.head,
-          exprs(1).eval(null).asInstanceOf[Number].intValue(),
-          exprs(2).eval(null).asInstanceOf[Number].intValue()), "built-in")
-  }
-
-  def apply(spark: SparkSession, c: Column, k: Int, w: Int): Column = {
-    register(spark)
+  def apply(c: Column, k: Int, w: Int): Column =
     org.apache.spark.sql.functions.call_function("winnow_grams",
       c, org.apache.spark.sql.functions.lit(k),
       org.apache.spark.sql.functions.lit(w))
-  }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -110,23 +110,7 @@ object WordpieceEncode {
     new GenericArrayData(pieces.toArray)
   }
 
-  /** Idempotent SQL-surface registration: second arg is a foldable
-    * array<string> literal (the vocabulary). */
-  def register(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("wordpiece_encode")))
-      reg.createOrReplaceTempFunction(
-        "wordpiece_encode", exprs => {
-          val arr = exprs(1).eval(null).asInstanceOf[ArrayData]
-          WordpieceEncode(exprs.head,
-            (0 until arr.numElements()).map(j => arr.getUTF8String(j).toString))
-        }, "built-in")
-  }
-
-  def apply(spark: SparkSession, c: Column, vocab: Seq[String]): Column = {
-    register(spark)
+  def apply(c: Column, vocab: Seq[String]): Column =
     org.apache.spark.sql.functions.call_function("wordpiece_encode",
       c, org.apache.spark.sql.functions.typedLit(vocab))
-  }
 }

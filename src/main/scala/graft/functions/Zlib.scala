@@ -2,7 +2,7 @@ package graft.functions
 
 import java.util.zip.{Deflater, Inflater}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpectsInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType}
@@ -85,27 +85,12 @@ object Zlib {
     out.toByteArray
   }
 
-  /** Register SQL-callable functions on a session; Column API via
+  /** Column faces of the SQL functions [[graft.GraftExtensions]] installs:
     * `call_function` keeps us on the public Column surface (Spark 4 hides
     * the Expression-backed Column constructor). */
-  def register(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("zlib_compress")))
-      reg.createOrReplaceTempFunction(
-        "zlib_compress", exprs => ZlibCompress(exprs.head), "built-in")
-    if (!reg.functionExists(FunctionIdentifier("zlib_decompress")))
-      reg.createOrReplaceTempFunction(
-        "zlib_decompress", exprs => ZlibDecompress(exprs.head), "built-in")
-  }
-
-  def compressCol(spark: SparkSession, c: Column): Column = {
-    register(spark)
+  def compressCol(c: Column): Column =
     org.apache.spark.sql.functions.call_function("zlib_compress", c)
-  }
 
-  def decompressCol(spark: SparkSession, c: Column): Column = {
-    register(spark)
+  def decompressCol(c: Column): Column =
     org.apache.spark.sql.functions.call_function("zlib_decompress", c)
-  }
 }

@@ -97,7 +97,7 @@ object KvSink {
     }
     val json = to_json(struct(fields: _*)).cast("binary")
     df.select(sha2(col(idCol).cast("string"), 256).as("key"),
-      Codec.compressCol(spark, json, codec).as("payload"))
+      Codec.compressCol(json, codec).as("payload"))
   }
 
   /** A bare overwrite clears the live path BEFORE the new files land,
@@ -156,7 +156,7 @@ object KvSink {
     val cutoff = asOfMicros - days.toLong * 24L * 3600L * 1000000L
     recoverInterrupted(spark, kvPath)
     val kv = spark.read.parquet(kvPath)
-    val json = Codec.decompressCol(spark, col("payload"), codec).cast("string")
+    val json = Codec.decompressCol(col("payload"), codec).cast("string")
     val ver = get_json_object(json, s"$$.$verField").cast("long")
     rewriteInPlace(spark, kvPath,
       kv.where(coalesce(ver >= cutoff, lit(keepUnversioned))))
@@ -298,6 +298,6 @@ object KvSink {
   def decodePayload(spark: SparkSession, kv: DataFrame,
       codec: String = "zlib"): DataFrame = {
     kv.select(col("key"),
-      Codec.decompressCol(spark, col("payload"), codec).cast("string").as("json"))
+      Codec.decompressCol(col("payload"), codec).cast("string").as("json"))
   }
 }

@@ -48,7 +48,7 @@ object CorpusExport {
       .localCheckpoint(false) // consumed by the keep join AND the histogram
     val kept = docs.join(verdicts.where($"keep").select($"doc_id"), Seq("doc_id"))
     val keyed = kept.select($"doc_id", $"text", $"n_chars",
-        DedupQueries.h60(s, concat(lit("shard:"), $"doc_id".cast("string"))).as("h"))
+        DedupQueries.h60(concat(lit("shard:"), $"doc_id".cast("string"))).as("h"))
       .withColumn("one", lit(1L))
     val ranked = graft.plans.PrefixSumPlan.scan(keyed, "h", "one", "rank0")
       .select($"doc_id", $"text", $"n_chars",

@@ -131,7 +131,7 @@ object ComposeQueries {
     val occ = occIn.map(o => survivorPrune(o, passIds))
       .getOrElse(survivorPrune(docs, passIds)
         .select($"doc_id", explode(DedupQueries.shingles($"text")).as("sh"))
-        .select($"doc_id", DedupQueries.h60(s, $"sh").as("h")))
+        .select($"doc_id", DedupQueries.h60($"sh").as("h")))
       .localCheckpoint(false)
     val memberOcc = survivorPrune(occ, s3Ids)
     // near-dup: the q88-shape LSH chain over the shared occurrences

@@ -102,7 +102,7 @@ object DedupQueries {
     * can DROP and rewrite its table without wedging the frame). */
   private[graft] def taggedOccCorpusFromText(s: SparkSession, dir: String): DataFrame =
     occMemo.getOrBuild(s, dir) {
-      taggedMintOcc(s, Tables.documents(s, dir), outer = true)
+      taggedMintOcc(Tables.documents(s, dir), outer = true)
         .localCheckpoint(false)
     }
 
@@ -112,8 +112,7 @@ object DedupQueries {
     * and the production memo cannot drift (review finding r13:
     * the single-sourcing rule this file cites for oracle text applies
     * to the mint expression too). */
-  private def taggedMintOcc(s: SparkSession, docs: DataFrame,
-      outer: Boolean): DataFrame = {
+  private def taggedMintOcc(docs: DataFrame, outer: Boolean): DataFrame = {
     val mint = graft.functions.Cols.bind(toks(col("text"))) { t =>
       concat(
         transform(shingleArr(t), g => struct(lit(0).as("kind"), g.as("g"))),
@@ -122,7 +121,7 @@ object DedupQueries {
     docs
       .select(col("doc_id"),
         (if (outer) explode_outer(mint) else explode(mint)).as("o"))
-      .select(col("doc_id"), col("o.kind").as("kind"), h60(s, col("o.g")).as("h"))
+      .select(col("doc_id"), col("o.kind").as("kind"), h60(col("o.g")).as("h"))
   }
 
   /** The tagged-occurrence mint over an ARBITRARY (doc_id, text) frame —
@@ -132,7 +131,7 @@ object DedupQueries {
     * would diverge from a full re-ingest. Not memoized: increments are
     * batch-sized one-shot frames, not the per-(session, dir) corpus. */
   private[graft] def taggedOccForDocs(s: SparkSession, docs: DataFrame): DataFrame =
-    taggedMintOcc(s, docs, outer = true)
+    taggedMintOcc(docs, outer = true)
 
   /** The (doc_id, h) shingle-occurrence view of [[taggedOccCorpus]] in
     * the OUTER form [[minhashSignatures]] mints (null h row for a
@@ -166,14 +165,14 @@ object DedupQueries {
   /** First 8 md5 hex chars of a token as a 32-bit unsigned value in a
     * long (native Md5Prefix64 expression — one digest call, no hex
     * string; identical values to conv(substring(md5,1,8),16,10)). */
-  def h32(s: SparkSession, t: Column): Column =
-    graft.functions.Md5Prefix64(s, t.cast("binary"), 8)
+  def h32(t: Column): Column =
+    graft.functions.Md5Prefix64(t.cast("binary"), 8)
 
   /** First 15 md5 hex chars as a 60-bit value in a long — the numeric
     * minhash domain (8-byte signatures instead of 32-char strings:
     * smaller shuffle rows, long min-agg instead of string compare). */
-  def h60(s: SparkSession, c: Column): Column =
-    graft.functions.Md5Prefix64(s, c.cast("binary"), 15)
+  def h60(c: Column): Column =
+    graft.functions.Md5Prefix64(c.cast("binary"), 15)
 
   // ---- shared building blocks (oracle SQL side) ----
 
@@ -277,9 +276,8 @@ object DedupQueries {
     * per-doc inconsistencies); odds stay negligible to ~10⁸ distinct
     * shingles, the q29 tradeoff. */
   def minhashSignatures(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
     val occ = docs.select(col("doc_id"), explode_outer(col("shingles")).as("sh"))
-      .select(col("doc_id"), h60(s, col("sh")).as("h"))
+      .select(col("doc_id"), h60(col("sh")).as("h"))
       .localCheckpoint(false)
     minhashFromHashedOcc(occ)
   }
@@ -290,9 +288,8 @@ object DedupQueries {
     * so q88's single-scan composition can feed its shared occurrence
     * checkpoint straight in. */
   private[graft] def minhashFromHashedOcc(occ: DataFrame): DataFrame = {
-    val s = occ.sparkSession
     val hashCols = (0 until NumHashes).map(j =>
-      h60(s, concat(lit(s"$j:"), col("h").cast("string"))).as(s"h_$j"))
+      h60(concat(lit(s"$j:"), col("h").cast("string"))).as(s"h_$j"))
     val shingleHashes = occ.select(col("h")).where(col("h").isNotNull).distinct()
       .select(col("h") +: hashCols: _*)
     val minCols = (0 until NumHashes).map(j => min(col(s"h_$j")).as(s"mh_$j"))
@@ -315,10 +312,10 @@ object DedupQueries {
     // md5 + NumHashes chain digests, not NumHashes·2 (HOF lambdas get no
     // CSE — the Cols.bind rationale; review finding r12)
     val sig = graft.functions.Cols.bind(
-        transform(col("shingles"), sh => h60(s, sh))) { hs =>
+        transform(col("shingles"), sh => h60(sh))) { hs =>
       struct((0 until NumHashes).map { j =>
         array_min(transform(hs, h =>
-          h60(s, concat(lit(s"$j:"), h.cast("string"))))).as(s"mh_$j")
+          h60(concat(lit(s"$j:"), h.cast("string"))))).as(s"mh_$j")
       }: _*)
     }
     docs.select(col("doc_id"), sig.as("sig"))
@@ -530,8 +527,8 @@ object DedupQueries {
       .unionByName(
         pairs.select($"doc_b".as("eval_id"), $"doc_a".as("other"), $"jaccard"))
     both
-      .withColumn("split", TextQueries.splitAssign(s, $"eval_id"))
-      .withColumn("other_split", TextQueries.splitAssign(s, $"other"))
+      .withColumn("split", TextQueries.splitAssign($"eval_id"))
+      .withColumn("other_split", TextQueries.splitAssign($"other"))
       .where($"split" =!= "train" && $"other_split" === "train")
       .groupBy($"eval_id", $"split")
       .agg(count(lit(1)).as("n_train_dups"), max($"jaccard").as("max_jaccard"))
@@ -579,7 +576,7 @@ object DedupQueries {
 
   def q27Simhash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val fp = simhashBits(h32(s, _), 32)($"text")
+    val fp = simhashBits(h32(_), 32)($"text")
     Tables.documents(s, dir).select($"doc_id", fp.as("simhash32")).orderBy($"doc_id")
   }
 
@@ -603,7 +600,7 @@ object DedupQueries {
     import s.implicits._
     val fp = graft.functions.Cols.bind(toks($"text")) { t =>
       val weighted = transform(sequence(lit(1), size(t)), i =>
-        i.cast("long") * h32(s, element_at(t, i)))
+        i.cast("long") * h32(element_at(t, i)))
       aggregate(weighted, lit(0L), (acc, x) => acc + x) % 2147483647L
     }
     Tables.documents(s, dir)
@@ -801,7 +798,7 @@ object DedupQueries {
     * 3-token shingles, kind 1 = positional [[DupGramN]]-grams, hashed to
     * 60 bits — one corpus scan, one tokenization. */
   private[graft] def q88TaggedOcc(s: SparkSession, dir: String): DataFrame =
-    taggedMintOcc(s, Tables.documents(s, dir), outer = false)
+    taggedMintOcc(Tables.documents(s, dir), outer = false)
 
   def q88ClusterKeeper(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1118,7 +1115,7 @@ object DedupQueries {
     val bandBits = SimBits / NumSimBands
     val mask = (1L << bandBits) - 1
     val sims = Tables.documents(s, dir)
-      .select($"doc_id", simhashBits(h60(s, _), SimBits)($"text").as("sim"))
+      .select($"doc_id", simhashBits(h60(_), SimBits)($"text").as("sim"))
     // checkpointed: the simhash HOF — the per-row cost center — must run
     // over the corpus ONCE, not once per self-join side (exchange reuse
     // does not dedupe the two branches; measured 2× without this)
@@ -1195,13 +1192,21 @@ object DedupQueries {
     * columns already riding the bucket rows — no second pass over the
     * images. Hot bands (billions of near-identical thumbnails) take the
     * same salting q26's LSH uses ([[graft.operators.SkewAudit]]). */
-  def q170PhashNeardup(s: SparkSession, dir: String): DataFrame = {
+  def q170PhashNeardup(s: SparkSession, dir: String): DataFrame =
+    hammingNeardupPairs(s, dir, graft.operators.Multimodal.phashCorpus, PhHamMax)
+
+  /** The q170/q171 body: fingerprint every document with `corpus`
+    * (doc_id, hi, lo; null words for undecodable rows), band the two
+    * 32-bit words into [[PhBands]] 16-bit chunks, bucket-join per (band,
+    * value), and keep the distinct pairs whose two-popcount Hamming
+    * distance is at most `hamMax`, sorted by (doc_a, doc_b). */
+  private def hammingNeardupPairs(s: SparkSession, dir: String,
+      corpus: (SparkSession, DataFrame) => DataFrame, hamMax: Int): DataFrame = {
     import s.implicits._
     // checkpointed: the render+decode+hash is the per-row cost center —
     // it must run over the corpus ONCE, not once per self-join side
     // (the q86 rationale)
-    val hashed = graft.operators.Multimodal
-      .phashCorpus(s, Tables.documents(s, dir).select($"doc_id"))
+    val hashed = corpus(s, Tables.documents(s, dir).select($"doc_id"))
       .where($"hi".isNotNull)
       .localCheckpoint()
     val bands = hashed.select($"doc_id", $"hi", $"lo",
@@ -1224,7 +1229,7 @@ object DedupQueries {
       .select($"doc_a", $"doc_b", $"a_hi", $"a_lo", $"b_hi", $"b_lo",
         (expr("bit_count(a_lo ^ b_lo)") + expr("bit_count(a_hi ^ b_hi)"))
           .cast("long").as("hamming"))
-      .where($"hamming" <= PhHamMax)
+      .where($"hamming" <= hamMax)
       .orderBy($"doc_a", $"doc_b")
   }
 
@@ -1289,38 +1294,8 @@ object DedupQueries {
     * never shuffle; a 16-byte signature + 4 band rows ride), candidates
     * are true bucket collisions, the verify is two codegen popcounts;
     * hot bands (billions of near-silent clips) take q26's salting. */
-  def q171AudioFpNeardup(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    // checkpointed: render+decode+fingerprint is the per-row cost
-    // center — it must run over the corpus ONCE, not once per
-    // self-join side (the q86/q170 rationale)
-    val hashed = graft.operators.Multimodal
-      .afpCorpus(s, Tables.documents(s, dir).select($"doc_id"))
-      .where($"hi".isNotNull)
-      .localCheckpoint()
-    val bands = hashed.select($"doc_id", $"hi", $"lo",
-      posexplode(array(
-        $"lo".bitwiseAND(lit(0xFFFFL)),
-        shiftright($"lo", 16).bitwiseAND(lit(0xFFFFL)),
-        $"hi".bitwiseAND(lit(0xFFFFL)),
-        shiftright($"hi", 16).bitwiseAND(lit(0xFFFFL))))
-        .as(Seq("band_idx", "band_val")))
-    val cand = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.hi").as("a_hi"), col("a.lo").as("a_lo"),
-        col("b.hi").as("b_hi"), col("b.lo").as("b_lo"))
-      .distinct()
-    cand
-      .select($"doc_a", $"doc_b", $"a_hi", $"a_lo", $"b_hi", $"b_lo",
-        (expr("bit_count(a_lo ^ b_lo)") + expr("bit_count(a_hi ^ b_hi)"))
-          .cast("long").as("hamming"))
-      .where($"hamming" <= AfpHamMax)
-      .orderBy($"doc_a", $"doc_b")
-  }
+  def q171AudioFpNeardup(s: SparkSession, dir: String): DataFrame =
+    hammingNeardupPairs(s, dir, graft.operators.Multimodal.afpCorpus, AfpHamMax)
 
   val q171Sql: String = {
     val baseBit = "((" + sqlH60(
@@ -1395,7 +1370,7 @@ object DedupQueries {
     import s.implicits._
     val occ = docs
       .select($"doc_id", posexplode(dupGramsCol).as(Seq("p0", "g_raw")))
-      .select($"doc_id", ($"p0" + 1).cast("long").as("p"), h60(s, $"g_raw").as("g"))
+      .select($"doc_id", ($"p0" + 1).cast("long").as("p"), h60($"g_raw").as("g"))
     occ
       .withColumn("dup", count(lit(1)).over(Window.partitionBy($"g")) >= 2)
       .withColumn("run_key",
@@ -1683,11 +1658,11 @@ object DedupQueries {
     import s.implicits._
     val occ = docs
       .select($"source", explode(shingles($"text")).as("sh"))
-      .select($"source", h60(s, $"sh").as("h"))
+      .select($"source", h60($"sh").as("h"))
       .distinct()
       .localCheckpoint(false)
     val hashCols = (0 until NumHashes).map(j =>
-      min(h60(s, concat(lit(s"$j:"), $"h".cast("string")))).as(s"mh_$j"))
+      min(h60(concat(lit(s"$j:"), $"h".cast("string")))).as(s"mh_$j"))
     val sig = occ.groupBy($"source").agg(hashCols.head, hashCols.tail: _*)
     val agree = (0 until NumHashes).map(j =>
       when(col(s"a.mh_$j") === col(s"b.mh_$j"), 1L).otherwise(0L)).reduce(_ + _)
@@ -1785,7 +1760,7 @@ object DedupQueries {
     val occ = docs
       .select($"doc_id", posexplode(segsOf).as(Seq("seg_pos", "seg")))
       .select($"doc_id", $"seg_pos".cast("long").as("seg_pos"), $"seg",
-        h60(s, $"seg").as("h"))
+        h60($"seg").as("h"))
     // Global first occurrence by (doc_id, seg_pos): struct-ordered min —
     // exact for any doc_id magnitude or segment count (a packed
     // doc_id·100000+seg_pos key corrupts order for ≥100k-segment docs;
@@ -1887,7 +1862,7 @@ object DedupQueries {
     docsIn
       .where(length($"text") >= WinnowK)
       .select($"doc_id",
-        explode(graft.functions.WinnowGrams(s, $"text", WinnowK, WinnowW))
+        explode(graft.functions.WinnowGrams($"text", WinnowK, WinnowW))
           .as("gram"))
   }
 
@@ -1904,7 +1879,7 @@ object DedupQueries {
         (length($"text") - K + 1).as("ng"),
         least(lit(WinnowW), length($"text") - K + 1).as("weff"))
     val grams = graft.functions.Cols.bind(
-        transform(sequence(lit(1), $"ng"), p => h32(s, $"text".substr(p, lit(K))))) { hs =>
+        transform(sequence(lit(1), $"ng"), p => h32($"text".substr(p, lit(K))))) { hs =>
       graft.functions.Cols.bind(
           transform(sequence(lit(1), $"ng" - $"weff" + 1), j =>
             array_min(slice(hs, j, $"weff")))) { mins =>
@@ -2134,7 +2109,7 @@ object DedupQueries {
     val occ = docsSh
       .select($"doc_id", size($"shingles").cast("long").as("n_sh"),
         explode($"shingles").as("sh_raw"))
-      .select($"doc_id", $"n_sh", h60(s, $"sh_raw").as("sh"))
+      .select($"doc_id", $"n_sh", h60($"sh_raw").as("sh"))
     val rare = occ
       .withColumn("df", count(lit(1)).over(Window.partitionBy($"sh")))
       .where($"df" <= PairingDfCap)

@@ -623,7 +623,7 @@ object EtlQueries {
   private[graft] def shardManifestCore(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
     val keyed = docs.select($"doc_id", $"n_chars",
-      DedupQueries.h60(s, concat(lit("shard:"), $"doc_id".cast("string"))).as("h"))
+      DedupQueries.h60(concat(lit("shard:"), $"doc_id".cast("string"))).as("h"))
       .withColumn("one", lit(1L))
     graft.plans.PrefixSumPlan.scan(keyed, "h", "one", "rank0")
       .select($"doc_id", $"n_chars", $"h",
@@ -696,7 +696,7 @@ object EtlQueries {
       .partitionBy($"event_type").orderBy($"h")
     val hashes = users
       .select($"event_type",
-        DedupQueries.h60(s, $"user_id".cast("string")).as("h"))
+        DedupQueries.h60($"user_id".cast("string")).as("h"))
       .distinct()
     val ranked = hashes
       .withColumn("rn", row_number().over(w)).where($"rn" <= ThetaK)

@@ -476,7 +476,7 @@ object GraphQueries {
     val tris = o
       .join(adj.select($"src", $"nbrs".as("au")), Seq("src"))
       .join(adj.select($"src".as("dst"), $"nbrs".as("av")), Seq("dst"))
-      .agg(coalesce(sum(graft.functions.Vec.icountCol(s, $"au", $"av")),
+      .agg(coalesce(sum(graft.functions.Vec.icountCol($"au", $"av")),
         lit(0L)).as("n_triangles"))
     // one audit row assembled IN the plan (1-row aggregates cross-joined)
     // — no driver-side action

@@ -44,10 +44,10 @@ object SimilarityQueries {
   // oracle hash is unchanged. HOF mirrors are pinned equal in VecSpec.
 
   def dot(a: Column, b: Column): Column =
-    graft.functions.Vec.dotCol(SparkSession.active, a, b)
+    graft.functions.Vec.dotCol(a, b)
 
   def norm2(a: Column): Column =
-    graft.functions.Vec.norm2Col(SparkSession.active, a)
+    graft.functions.Vec.norm2Col(a)
 
   /** The round-1 HOF formulations, kept as the equivalence oracle for
     * VecSpec (and as documentation of the portable semantics). */
@@ -152,9 +152,8 @@ object SimilarityQueries {
     * 65 aggregate expressions to 2 (guide §7.3 plan-size cost — this
     * subtree is re-optimized per AQE stage in every consumer loop). */
   def labelCentroids(emb: DataFrame): DataFrame = {
-    val s = emb.sparkSession
     emb.groupBy(col("label"))
-      .agg(graft.functions.VecAgg.sumDCol(s, col("embedding")).as("ssum"),
+      .agg(graft.functions.VecAgg.sumDCol(col("embedding")).as("ssum"),
         count(lit(1)).as("s_cnt"))
       .select(col("label").as("c_label"),
         transform(col("ssum"), v => v / col("s_cnt")).as("centroid"))
@@ -368,10 +367,9 @@ object SimilarityQueries {
     * 1-row frame sits under every SQ8/PQ/OPQ training chain, so the fan
     * was re-planned once per AQE stage per consumer loop (guide §7.3). */
   private[graft] def sq8Stats(emb: DataFrame): DataFrame = {
-    val s = emb.sparkSession
     emb.agg(
-      graft.functions.VecAgg.minCol(s, col("embedding")).as("lo"),
-      graft.functions.VecAgg.maxCol(s, col("embedding")).as("hi"))
+      graft.functions.VecAgg.minCol(col("embedding")).as("lo"),
+      graft.functions.VecAgg.maxCol(col("embedding")).as("hi"))
   }
 
   /** Affine per-dim 8-bit encode against broadcast corpus stats:
@@ -400,7 +398,7 @@ object SimilarityQueries {
     // native codegen expression — identical long fold order to the HOF
     // chain (hash-preserving), one static call per pair instead of 64
     // interpreted lambda applications (VecSpec pins the equivalence)
-    val idist = graft.functions.Vec.isqdCol(s, $"qcodes", $"codes")
+    val idist = graft.functions.Vec.isqdCol($"qcodes", $"codes")
     val w = Window.partitionBy($"query_id").orderBy($"idist".asc, $"neighbor_id".asc)
     corpus.join(broadcast(queries), $"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id".as("neighbor_id"), idist.as("idist"))
@@ -518,8 +516,8 @@ object SimilarityQueries {
 
   // native codegen integer sq-distance (same fold order as the HOF
   // chain — hash-preserving; VecSpec pins the equivalence)
-  private def isqd(s: SparkSession, a: Column, b: Column): Column =
-    graft.functions.Vec.isqdCol(s, a, b)
+  private def isqd(a: Column, b: Column): Column =
+    graft.functions.Vec.isqdCol(a, b)
 
   // nearest codebook entry per (vector, subspace): integer distance,
   // k-asc tie break; WindowGroupLimit collapses rn=1 to a partial argmin
@@ -528,7 +526,7 @@ object SimilarityQueries {
     val wArgmin = Window.partitionBy($"vec_id", $"m").orderBy($"d".asc, $"k".asc)
     subcodes
       .join(broadcast(cb), Seq("m"))
-      .select($"vec_id", $"m", $"sub", $"k", isqd(s, $"sub", $"cent").as("d"))
+      .select($"vec_id", $"m", $"sub", $"k", isqd($"sub", $"cent").as("d"))
       .withColumn("rn", row_number().over(wArgmin)).where($"rn" === 1)
   }
 
@@ -545,7 +543,7 @@ object SimilarityQueries {
     // associative-exact — same double division and floor per element)
     pqNearest(s, subcodes, seeds)
       .groupBy($"m", $"k")
-      .agg(graft.functions.VecAgg.sumLCol(s, $"sub").as("ssum"),
+      .agg(graft.functions.VecAgg.sumLCol($"sub").as("ssum"),
         count(lit(1)).as("cnt"))
       .select($"m", $"k",
         transform($"ssum", v => floor(v / $"cnt").cast("long")).as("cent"))
@@ -574,7 +572,7 @@ object SimilarityQueries {
     import s.implicits._
     querySubcodes
       .join(broadcast(cents), Seq("m"))
-      .select($"vec_id".as("query_id"), $"m", $"k", isqd(s, $"sub", $"cent").as("d"))
+      .select($"vec_id".as("query_id"), $"m", $"k", isqd($"sub", $"cent").as("d"))
       .groupBy($"query_id")
       .agg(map_from_entries(collect_list(
         struct(($"m" * PqK + $"k").cast("int").as("key"), $"d".as("value")))).as("lut"))
@@ -747,7 +745,7 @@ object SimilarityQueries {
     import s.implicits._
     val stats = sq8Stats(emb).localCheckpoint(false) // 1 row, shared encode input
     val rotated = sq8Encode(emb, stats)
-      .select($"vec_id", graft.functions.Vec.hadamardCol(s, $"codes").as("codes"))
+      .select($"vec_id", graft.functions.Vec.hadamardCol($"codes").as("codes"))
     subcodeView(s, rotated)
   }
 
@@ -1222,7 +1220,6 @@ object SimilarityQueries {
     val k = math.ceil(math.sqrt(n.toDouble)).toLong
     val stats = sq8Stats(emb).localCheckpoint(false) // 1 row
     val codes = sq8Encode(emb, stats).localCheckpoint(false) // ≥2 consumers
-    def isqd(a: Column, b: Column): Column = graft.functions.Vec.isqdCol(s, a, b)
     val wArgmin = Window.partitionBy($"vec_id").orderBy($"dd".asc, $"k".asc)
     def assign(cb: DataFrame): DataFrame = codes
       .join(broadcast(cb), lit(true))
@@ -1236,7 +1233,7 @@ object SimilarityQueries {
       // rule). Round-19: the 64-col floor-mean fan → one elementwise
       // long-sum aggregate (pqTrainCodebook's rewrite; values unchanged)
       val cb = asg.groupBy($"k")
-        .agg(graft.functions.VecAgg.sumLCol(s, $"codes").as("ssum"),
+        .agg(graft.functions.VecAgg.sumLCol($"codes").as("ssum"),
           count(lit(1)).as("cnt"))
         .select($"k", transform($"ssum", v => floor(v / $"cnt").cast("long")).as("cent"))
       asg = assign(cb)

@@ -186,16 +186,16 @@ object TextQueries {
   /** The per-document split assignment: a pure function of the id, so a
     * document's split survives corpus growth/shrinkage (row_number splits
     * reshuffle on any change) — pinned in PipelineQueriesSpec. */
-  def splitAssign(s: SparkSession, id: Column): Column = {
+  def splitAssign(id: Column): Column = {
     val bucket = pmod(
-      graft.functions.Md5Prefix64(s, id.cast("string").cast("binary"), 8),
+      graft.functions.Md5Prefix64(id.cast("string").cast("binary"), 8),
       lit(100L))
     when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
   }
 
   def q56StratifiedSplit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val split = splitAssign(s, $"doc_id")
+    val split = splitAssign($"doc_id")
     Tables.documents(s, dir)
       .select($"lang", split.as("split"), $"n_chars")
       .groupBy($"lang", $"split")
@@ -419,7 +419,7 @@ object TextQueries {
     Tables.documents(s, dir)
       .select($"doc_id", explode(toks($"text")).as("token"))
       .select($"doc_id",
-        pmod(DedupQueries.h32(s, $"token"), lit(HashBuckets)).as("bucket"))
+        pmod(DedupQueries.h32($"token"), lit(HashBuckets)).as("bucket"))
       .groupBy($"doc_id", $"bucket").agg(count(lit(1)).as("n"))
       .orderBy($"doc_id", $"bucket")
   }
@@ -1075,7 +1075,7 @@ object TextQueries {
     val occ = docs
       .select($"doc_id", isTarget.as("tgt"), explode(split($"text", " ")).as("tok"))
       .select($"doc_id", $"tgt",
-        pmod(graft.queries.DedupQueries.h32(s, $"tok"), lit(B)).as("f"))
+        pmod(graft.queries.DedupQueries.h32($"tok"), lit(B)).as("f"))
     val counts = occ.groupBy($"f").agg(
       sum(when($"tgt", 1L).otherwise(0L)).as("ct"),
       count(lit(1)).as("cr"))
@@ -1608,7 +1608,7 @@ object TextQueries {
       .select(expr(s"n_corpus div $MixTargetDiv").as("n_target"), $"sw")
     val stats = broadcast(perLang.crossJoin(broadcast(totals)))
     val dec = "decimal(38,0)"
-    val h = graft.functions.Md5Prefix64(s, $"doc_id".cast("string").cast("binary"), 8)
+    val h = graft.functions.Md5Prefix64($"doc_id".cast("string").cast("binary"), 8)
     val kept = docs.join(stats, Seq("lang"))
       .where(h.cast(dec) * $"sw".cast(dec) * $"n_docs".cast(dec) <
         $"n_target".cast(dec) * $"w".cast(dec) * lit(4294967296L).cast(dec))
@@ -1860,12 +1860,11 @@ object TextQueries {
   private[graft] def spanCorruptionCore(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
     val B = MaskBlock
-    def h32(c: Column): Column = graft.functions.Md5Prefix64(s, c.cast("binary"), 8)
     // block b (0-based) is selected iff the hash coin hits AND its span
     // start (1-based position b*B+4) exists in the document
     def sel(b: Column, n: Column): Column =
-      h32(concat(col("doc_id").cast("string"), lit(":"), b.cast("string"))) % MaskMod === 0 &&
-        b * B + 4 <= n
+      DedupQueries.h32(concat(col("doc_id").cast("string"), lit(":"), b.cast("string"))) %
+        MaskMod === 0 && b * B + 4 <= n
     def sentinel(b: Column): Column =
       concat(lit("<extra_id_"), b.cast("string"), lit(">"))
     val core = graft.functions.Cols.bind(toks($"text")) { t =>
@@ -1977,16 +1976,16 @@ object TextQueries {
   /** Hashed-bucket fixed weight of one feature — q107's scorer, shared
     * with the q161/q162 evaluation audits so the score definition cannot
     * drift. */
-  private def clfWeight(s: SparkSession)(f: Column): Column = {
-    val bucket = pmod(DedupQueries.h32(s, f), lit(ClfBuckets))
+  private def clfWeight(f: Column): Column = {
+    val bucket = pmod(DedupQueries.h32(f), lit(ClfBuckets))
     (bucket * lit(2654435761L)) % 1001L - 500L
   }
 
   /** The q107 margin as ONE map-only column over `text` (features
     * materialized once per row via [[graft.functions.Cols.bind]]). */
-  private[graft] def clfMarginCol(s: SparkSession): Column =
+  private[graft] def clfMarginCol: Column =
     graft.functions.Cols.bind(clfFeatures) { fs =>
-      aggregate(fs, lit(0L), (acc, f) => acc + clfWeight(s)(f))
+      aggregate(fs, lit(0L), (acc, f) => acc + clfWeight(f))
     }
 
   /** q107 body over an arbitrary documents frame (docs/SCALE.md measures it
@@ -1997,7 +1996,7 @@ object TextQueries {
       .select($"doc_id", clfFeatures.as("feats"))
       .select($"doc_id",
         size($"feats").cast("long").as("n_feats"),
-        aggregate($"feats", lit(0L), (acc, f) => acc + clfWeight(s)(f)).as("margin"))
+        aggregate($"feats", lit(0L), (acc, f) => acc + clfWeight(f)).as("margin"))
       .select($"doc_id", $"n_feats", $"margin",
         ($"margin".cast("double") / $"n_feats".cast("double")).as("avg_w"),
         ($"margin" > 0).as("keep"))
@@ -2054,7 +2053,7 @@ object TextQueries {
   def q161ClfAuc(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     aucCore(s, Tables.documents(s, dir)
-      .select($"lang", clfMarginCol(s).as("m"), qualityOkCol.as("pos")))
+      .select($"lang", clfMarginCol.as("m"), qualityOkCol.as("pos")))
   }
 
   /** q161 body over any (lang, m: long score, pos: boolean) frame —
@@ -2169,7 +2168,7 @@ object TextQueries {
   def q162GateAgreement(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val base = Tables.documents(s, dir)
-      .select($"doc_id", qualityOkCol.as("rule"), (clfMarginCol(s) > 0L).as("clf"))
+      .select($"doc_id", qualityOkCol.as("rule"), (clfMarginCol > 0L).as("clf"))
     val lm = lmDocSums(s, dir)
       .select($"doc_id", (lmAvgCol >= LmKeepMin).as("lm"))
     // left join: a doc too short to have bigrams has no LM score — the
@@ -2268,7 +2267,7 @@ object TextQueries {
   def q166SourceAgreement(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val r = Tables.documents(s, dir)
-      .select($"source", qualityOkCol.as("a"), (clfMarginCol(s) > 0L).as("b"))
+      .select($"source", qualityOkCol.as("a"), (clfMarginCol > 0L).as("b"))
     withKappa(r.groupBy($"source").agg(
       sum(when($"a" && $"b", 1L).otherwise(0L)).as("n11"),
       sum(when($"a" && !$"b", 1L).otherwise(0L)).as("n10"),
@@ -2322,7 +2321,7 @@ object TextQueries {
   def q165CalibrationTable(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     calibCore(s, Tables.documents(s, dir)
-      .select(clfMarginCol(s).as("m"), qualityOkCol.as("pos")))
+      .select(clfMarginCol.as("m"), qualityOkCol.as("pos")))
   }
 
   /** q165 body over any (m: long score, pos: boolean) frame. */
@@ -2805,7 +2804,7 @@ object TextQueries {
         sequence(lit(1), length($"word")), i => $"word".substr(i, lit(1)))).as("p"))
       .distinct().orderBy($"p").collect().map(_.getString(0)).toSeq
     val vocab = (chars ++ merges.map(m => m._2 + m._3)).distinct
-    val pieces = graft.functions.WordpieceEncode(s, $"word", vocab)
+    val pieces = graft.functions.WordpieceEncode($"word", vocab)
     val unk = lit(graft.functions.WordpieceEncode.Unk)
     val wtok = trained.select($"word", pieces.as("pieces"))
       .select($"word", size($"pieces").as("np"),
@@ -2927,7 +2926,7 @@ object TextQueries {
     import s.implicits._
     val words = filter(split($"text", " "),
       w => w =!= "" && !w.contains(BpeSep))
-    val seg = graft.functions.UnigramSegment(s, $"word", vocabF)
+    val seg = graft.functions.UnigramSegment($"word", vocabF)
     val wtok = docs.select(explode(words).as("word")).distinct()
       .select($"word", seg.as("seg"))
       .select($"word", $"seg.n_pieces".as("np"), $"seg.freq_sum".as("fs"))
@@ -3115,7 +3114,7 @@ object TextQueries {
     * oracle side). Map-only at any scale. */
   def q134NfcNormalize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val norm = graft.functions.NfcNormalize(s, $"text")
+    val norm = graft.functions.NfcNormalize($"text")
     Tables.documents(s, dir)
       .select($"doc_id", norm.as("norm"), $"text")
       .select($"doc_id",
@@ -3191,7 +3190,7 @@ object TextQueries {
         (length(st) - length(noLink(l))) * 2 <= length(st)
     }
     docs
-      .select($"doc_id", graft.functions.HtmlText(s, html).as("xt"))
+      .select($"doc_id", graft.functions.HtmlText(html).as("xt"))
       .withColumn("lines",
         filter(transform(split($"xt", "\n"), norm), l => l =!= ""))
       .withColumn("kept", transform(filter($"lines", keep), strip))

@@ -84,7 +84,7 @@ object AgreementStream {
     val rows = docs
       .select($"doc_id", $"source",
         TextQueries.qualityOkCol.as("a"),
-        (TextQueries.clfMarginCol(spark) > 0L).as("b"))
+        (TextQueries.clfMarginCol > 0L).as("b"))
       .as[FlagRow]
     val conf =
       if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout()

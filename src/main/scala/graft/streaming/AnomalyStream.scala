@@ -111,14 +111,11 @@ object AnomalyStream {
     * (test path; ttl = None so processAllAvailable terminates). */
   def runBounded(spark: SparkSession, glob: String, queryName: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val q = anomalies(EventStream.readEvents(spark, glob), ttl = None)
+    BoundedDrive.drain(anomalies(EventStream.readEvents(spark, glob), ttl = None)
       .writeStream
       .outputMode(OutputMode.Append())
       .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop() // a poisoned batch must not leak a live query
+      .queryName(queryName))
     spark.table(queryName)
   }
 }

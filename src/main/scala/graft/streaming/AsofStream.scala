@@ -117,14 +117,11 @@ object AsofStream {
     * see [[asofMatches]]). */
   def runBounded(spark: SparkSession, dir: String, queryName: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val q = asofMatches(EventStream.readEvents(spark, dir), ttl = None)
+    BoundedDrive.drain(asofMatches(EventStream.readEvents(spark, dir), ttl = None)
       .writeStream
       .outputMode(OutputMode.Append())
       .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .queryName(queryName))
     spark.table(queryName)
   }
 
@@ -138,15 +135,12 @@ object AsofStream {
   def runBoundedResumable(spark: SparkSession, dir: String,
       outDir: String, checkpoint: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val q = asofMatches(EventStream.readEvents(spark, dir), ttl = None)
+    BoundedDrive.drain(asofMatches(EventStream.readEvents(spark, dir), ttl = None)
       .writeStream
       .outputMode(OutputMode.Append())
       .format("parquet")
       .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .option("checkpointLocation", checkpoint))
     spark.read.parquet(outDir)
   }
 }

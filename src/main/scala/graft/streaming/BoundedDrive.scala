@@ -1,17 +1,24 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import org.apache.spark.sql.types.StructType
 
-/** Shared bounded test driver for the stateful streaming faces: read a
-  * drop-dir glob with an explicit schema, run the face's transform,
-  * drive to completion into a memory sink, and ALWAYS stop the query —
-  * a poisoned batch must not leak a live query holding the checkpoint
-  * (the stop-in-finally convention every face shared by copy-paste
-  * before this helper; review r15). */
+/** Shared bounded drivers for the streaming faces. Every bounded face
+  * drives its query through [[drain]], which ALWAYS stops it — a
+  * poisoned batch must not leak a live query holding the checkpoint. */
 private[streaming] object BoundedDrive {
 
+  /** Start `writer`, process everything available, stop in a finally. */
+  def drain(writer: DataStreamWriter[_]): Unit = {
+    val q = writer.start()
+    try q.processAllAvailable()
+    finally q.stop()
+  }
+
+  /** Read a drop-dir glob with an explicit schema, run the face's
+    * transform and [[drain]] it into a memory sink named `queryName`;
+    * returns the sink's table. */
   def run(spark: SparkSession, glob: String, queryName: String,
       schema: StructType, maxFilesPerTrigger: Option[Int])(
       toVerdicts: DataFrame => Dataset[_]): DataFrame = {
@@ -19,11 +26,9 @@ private[streaming] object BoundedDrive {
     val stream = maxFilesPerTrigger
       .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
       .parquet(glob)
-    val q = toVerdicts(stream)
+    drain(toVerdicts(stream)
       .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable()
-    finally q.stop()
+      .format("memory").queryName(queryName))
     spark.table(queryName)
   }
 }

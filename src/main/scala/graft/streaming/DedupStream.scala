@@ -120,16 +120,8 @@ object DedupStream {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("text",
         org.apache.spark.sql.types.StringType)))
-    val reader = spark.readStream.schema(schema)
-    val stream = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(glob)
-    val q = bandHits(stream, ttl = None)
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable()
-    finally q.stop() // a poisoned batch must not leak a live query
-    val hits = spark.table(queryName)
+    val hits = BoundedDrive.run(spark, glob, queryName, schema, maxFilesPerTrigger)(
+      bandHits(_, ttl = None))
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_band_hits"), min($"matched").as("first_match"))
     spark.read.schema(schema).parquet(glob).select($"doc_id").distinct()

@@ -111,7 +111,7 @@ object DriftStream {
     import spark.implicits._
     val rows = docs
       .select($"doc_id", $"source",
-        TextQueries.clfMarginCol(spark).as("m"),
+        TextQueries.clfMarginCol.as("m"),
         TextQueries.qualityOkCol.as("pos"))
       .as[MarginRow]
     val conf =

@@ -153,8 +153,8 @@ object EventStream {
       .groupBy(col("key"))
       .agg(max(struct(col("ver"), col("value"))).as("m"))
       .select(col("key"), col("m.ver").as("ver"), col("m.value").as("value"))
-      .select(col("key"), graft.functions.Zlib.compressCol(s,
-        payloadJson.cast("binary")).as("payload"))
+      .select(col("key"),
+        graft.functions.Zlib.compressCol(payloadJson.cast("binary")).as("payload"))
       .write.format("graft.sources.KvStoreSource")
       .option("path", kvDir).mode("overwrite").save()
     }
@@ -162,40 +162,31 @@ object EventStream {
 
   /** Drive attributionJoin to completion on a bounded drop-dir (test path). */
   def runBoundedAttribution(spark: SparkSession, dir: String, queryName: String): DataFrame = {
-    val q = attributionJoin(readEvents(spark, dir))
+    BoundedDrive.drain(attributionJoin(readEvents(spark, dir))
       .writeStream
       .outputMode("append")
       .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .queryName(queryName))
     spark.table(queryName)
   }
 
   /** Drive sessionize to completion on a bounded drop-dir (test path). */
   def runBoundedSessions(spark: SparkSession, dir: String, queryName: String): DataFrame = {
-    val q = sessionize(readEvents(spark, dir))
+    BoundedDrive.drain(sessionize(readEvents(spark, dir))
       .writeStream
       .outputMode("complete")
       .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .queryName(queryName))
     spark.table(queryName)
   }
 
   /** Run the stream to completion against a bounded input (test path). */
   def runBounded(spark: SparkSession, dir: String, queryName: String): DataFrame = {
-    val q = dailyRollup(readEvents(spark, dir))
+    BoundedDrive.drain(dailyRollup(readEvents(spark, dir))
       .writeStream
       .outputMode("complete")
       .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .queryName(queryName))
     spark.table(queryName)
   }
 }

@@ -105,14 +105,11 @@ object HeavyHittersStream {
       queryName: String): DataFrame = {
     implicit val s: SparkSession = spark
     import spark.implicits._
-    val q = heavyUsers(EventStream.readEvents(spark, glob), cap, ttl = None)
+    BoundedDrive.drain(heavyUsers(EventStream.readEvents(spark, glob), cap, ttl = None)
       .writeStream
       .outputMode(OutputMode.Update())
       .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop() // a poisoned batch must not leak a live query
+      .queryName(queryName))
     val all = spark.table(queryName)
     val wMax = org.apache.spark.sql.expressions.Window.partitionBy($"bucket")
     all.withColumn("max_seen", max($"n_seen").over(wMax))

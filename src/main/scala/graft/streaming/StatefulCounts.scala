@@ -43,14 +43,11 @@ object StatefulCounts {
   def runBounded(spark: SparkSession, dir: String, queryName: String): DataFrame = {
     implicit val s: SparkSession = spark
     import spark.implicits._
-    val q = runningCounts(EventStream.readEvents(spark, dir))
+    BoundedDrive.drain(runningCounts(EventStream.readEvents(spark, dir))
       .writeStream
       .outputMode(OutputMode.Update())
       .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .queryName(queryName))
     // memory sink in update mode appends one row per key per batch; the
     // final state per user is the row from the latest batch
     val all = spark.table(queryName)

@@ -17,8 +17,7 @@ class CodecSpec extends SparkSuite {
     val df = sample.toDF("id", "s")
     for (codec <- Codec.Names) {
       val out = df.select($"s",
-        Codec.decompressCol(spark,
-          Codec.compressCol(spark, $"s".cast("binary"), codec), codec)
+        Codec.decompressCol(Codec.compressCol($"s".cast("binary"), codec), codec)
           .cast("string").as("rt"))
       assert(out.where($"s" =!= $"rt").isEmpty, s"codec $codec failed round-trip")
     }

@@ -84,7 +84,7 @@ class HtmlTextSpec extends SparkSuite {
 
   test("codegen and interpreted paths agree") {
     val df = Seq("a<p>b</p>c &amp; d", "<script>x</script>ok").toDF("h")
-    val viaExpr = df.select(HtmlText(spark, $"h").as("t"))
+    val viaExpr = df.select(HtmlText($"h").as("t"))
       .collect().map(_.getString(0)).toSeq
     assert(viaExpr == Seq("a\nb\nc & d", "ok"))
   }

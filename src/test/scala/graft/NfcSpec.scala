@@ -45,7 +45,7 @@ class NfcSpec extends SparkSuite {
     assert(raw == 3, "unnormalized hashing must miss the duplicate")
     // normalized keys: the twins collapse
     val norm = docs.select(
-        md5(NfcNormalize(spark, $"text").cast("binary")).as("k"))
+        md5(NfcNormalize($"text").cast("binary")).as("k"))
       .distinct().count()
     assert(norm == 2, "NFC normalization must expose the duplicate")
   }

@@ -34,9 +34,9 @@ class PipelineQueriesSpec extends SparkSuite {
 
   test("q56 split assignment is stable under corpus growth (content-addressed)") {
     val full = Tables.documents(spark, sf0001)
-      .select($"doc_id", TextQueries.splitAssign(spark, $"doc_id").as("split"))
+      .select($"doc_id", TextQueries.splitAssign($"doc_id").as("split"))
     val subset = Tables.documents(spark, sf0001).where($"doc_id" % 3 === 0)
-      .select($"doc_id", TextQueries.splitAssign(spark, $"doc_id").as("s2"))
+      .select($"doc_id", TextQueries.splitAssign($"doc_id").as("s2"))
     val diverged = full.join(subset, "doc_id").where($"split" =!= $"s2")
     assert(diverged.isEmpty, "a document's split changed when the corpus shrank")
     // and the 80/10/10 target is roughly hit (md5 is uniform)

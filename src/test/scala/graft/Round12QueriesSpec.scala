@@ -171,17 +171,17 @@ class Round12QueriesSpec extends SparkSuite {
     val stats = SimilarityQueries.sq8Stats(emb).localCheckpoint(false)
     val codes = SimilarityQueries.sq8Encode(emb, stats).localCheckpoint(true)
     val rot = codes.select($"vec_id",
-      graft.functions.Vec.hadamardCol(spark, $"codes").as("codes"))
+      graft.functions.Vec.hadamardCol($"codes").as("codes"))
       .localCheckpoint(true)
     // (HD)(HD)^T = 64 I: integer squared distances scale EXACTLY by 64
     val a = codes.as("a"); val b = codes.as("b")
     val ra = rot.as("ra"); val rb = rot.as("rb")
     val joined = a.join(b, col("a.vec_id") + 1 === col("b.vec_id"))
       .select(col("a.vec_id").as("vec_id"),
-        graft.functions.Vec.isqdCol(spark, col("a.codes"), col("b.codes")).as("d"))
+        graft.functions.Vec.isqdCol(col("a.codes"), col("b.codes")).as("d"))
     val joinedRot = ra.join(rb, col("ra.vec_id") + 1 === col("rb.vec_id"))
       .select(col("ra.vec_id").as("vec_id"),
-        graft.functions.Vec.isqdCol(spark, col("ra.codes"), col("rb.codes")).as("dr"))
+        graft.functions.Vec.isqdCol(col("ra.codes"), col("rb.codes")).as("dr"))
     val cmp = joined.join(joinedRot, "vec_id").collect()
     assert(cmp.nonEmpty)
     cmp.foreach(r => assert(r.getAs[Long]("dr") == 64L * r.getAs[Long]("d")))

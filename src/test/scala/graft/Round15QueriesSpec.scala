@@ -272,7 +272,7 @@ class Round15QueriesSpec extends SparkSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val ids = pairs.flatMap(p => Seq(p._1, p._2)).distinct.toSeq.toDF("id")
     val split = ids.select($"id",
-      graft.queries.TextQueries.splitAssign(spark, $"id").as("s"))
+      graft.queries.TextQueries.splitAssign($"id").as("s"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val leaks = (pairs.map(p => (p._1, p._2, p._3)) ++
         pairs.map(p => (p._2, p._1, p._3)))

@@ -162,7 +162,7 @@ class Round6QueriesSpec extends SparkSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val sims = Tables.documents(spark, sf0001)
       .select($"doc_id",
-        DedupQueries.simhashBits(DedupQueries.h60(spark, _), DedupQueries.SimBits)($"text").as("sim"))
+        DedupQueries.simhashBits(DedupQueries.h60(_), DedupQueries.SimBits)($"text").as("sim"))
       .cache()
     val truth = sims.as("a").join(sims.as("b"), $"a.doc_id" < $"b.doc_id")
       .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"),

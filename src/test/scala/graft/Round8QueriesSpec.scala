@@ -106,9 +106,9 @@ class Round8QueriesSpec extends SparkSuite {
         (0 until DedupQueries.NumHashes).map(j => r.getAs[Long](s"mh_$j"))).toMap
     val occ = Tables.documents(spark, sf0001)
       .select($"source", explode(DedupQueries.shingles($"text")).as("sh"))
-      .select($"source", DedupQueries.h60(spark, $"sh").as("h")).distinct()
+      .select($"source", DedupQueries.h60($"sh").as("h")).distinct()
     val hashCols = (0 until DedupQueries.NumHashes).map(j =>
-      min(DedupQueries.h60(spark, concat(lit(s"$j:"), $"h".cast("string")))).as(s"mh_$j"))
+      min(DedupQueries.h60(concat(lit(s"$j:"), $"h".cast("string")))).as(s"mh_$j"))
     val direct = occ.groupBy($"source").agg(hashCols.head, hashCols.tail: _*)
       .collect().map(r => r.getString(0) ->
         (0 until DedupQueries.NumHashes).map(j => r.getAs[Long](s"mh_$j"))).toMap
@@ -250,7 +250,7 @@ class Round8QueriesSpec extends SparkSuite {
       .select($"lang", $"doc_id",
         explode(sequence(lit(1L), lit(1L) + $"doc_id" % 8L)).as("j"))
       .select($"lang", $"doc_id",
-        DedupQueries.h60(spark, concat($"doc_id".cast("string"), lit(":"),
+        DedupQueries.h60(concat($"doc_id".cast("string"), lit(":"),
           $"j".cast("string")).cast("binary")).as("t"))
       .groupBy($"lang", $"doc_id").agg(min($"t").as("ticket"))
       .collect().groupBy(_.getString(0)).view.mapValues(

@@ -11,7 +11,7 @@ class UnigramSpec extends SparkSuite {
 
   private def seg(word: String, vocab: Seq[(String, Long)]): (Long, Long) = {
     val r = Seq(word).toDF("w")
-      .select(UnigramSegment(spark, $"w", vocab).as("s"))
+      .select(UnigramSegment($"w", vocab).as("s"))
       .select($"s.n_pieces", $"s.freq_sum").collect()(0)
     (r.getLong(0), r.getLong(1))
   }
@@ -22,7 +22,7 @@ class UnigramSpec extends SparkSuite {
     val vocab = Seq(("a", 10L), ("aa", 5L), ("ab", 3L))
     assert(seg("aab", vocab) == (2L, 13L))
     val wp = Seq("aab").toDF("w")
-      .select(WordpieceEncode(spark, $"w", vocab.map(_._1)).as("p"))
+      .select(WordpieceEncode($"w", vocab.map(_._1)).as("p"))
       .collect()(0).getSeq[String](0)
     assert(wp == Seq(WordpieceEncode.Unk), "greedy verdict differs")
   }

@@ -38,9 +38,9 @@ class VecAggSpec extends SparkSuite {
       array((1 to dim).map(d => min(element_at($"v", d).cast("double"))): _*).as("lo"),
       array((1 to dim).map(d => max(element_at($"v", d).cast("double"))): _*).as("hi"))
     val agg = df.groupBy($"g").agg(
-      VecAgg.sumDCol(spark, $"v").as("s"),
-      VecAgg.minCol(spark, $"v").as("lo"),
-      VecAgg.maxCol(spark, $"v").as("hi"))
+      VecAgg.sumDCol($"v").as("s"),
+      VecAgg.minCol($"v").as("lo"),
+      VecAgg.maxCol($"v").as("hi"))
     val f = fan.orderBy($"g").collect()
     val a = agg.orderBy($"g").collect()
     assert(f.length == a.length)
@@ -64,7 +64,7 @@ class VecAggSpec extends SparkSuite {
       array((1 to dim).map(d =>
         floor(sum(element_at($"v", d)) / count(lit(1))).cast("long")): _*).as("m"))
     val agg = df.groupBy($"g")
-      .agg(VecAgg.sumLCol(spark, $"v").as("s"), count(lit(1)).as("c"))
+      .agg(VecAgg.sumLCol($"v").as("s"), count(lit(1)).as("c"))
       .select($"g", transform($"s", e => floor(e / $"c").cast("long")).as("m"))
     val f = fan.orderBy($"g").collect().map(_.getSeq[Long](1))
     val a = agg.orderBy($"g").collect().map(_.getSeq[Long](1))
@@ -75,7 +75,7 @@ class VecAggSpec extends SparkSuite {
     val df = Seq(Tuple1(Array(1L, 2L)), Tuple1(Array(1L, 2L, 3L))).toDF("v")
       .coalesce(1) // both rows in ONE buffer so update sees the mismatch
     val e = intercept[Exception] {
-      df.agg(VecAgg.sumLCol(spark, $"v")).collect()
+      df.agg(VecAgg.sumLCol($"v")).collect()
     }
     def chain(t: Throwable): Seq[String] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
@@ -91,7 +91,7 @@ class VecAggSpec extends SparkSuite {
     } :+ ((200, Array.empty[Long], sortedDistinct(5))) // empty side
     val df = rows.toDF("id", "a", "b")
     val out = df.select(
-      Vec.icountCol(spark, $"a", $"b").as("n"),
+      Vec.icountCol($"a", $"b").as("n"),
       size(array_intersect($"a", $"b")).cast("long").as("m")).collect()
     out.foreach(row => assert(row.getLong(0) == row.getLong(1)))
   }

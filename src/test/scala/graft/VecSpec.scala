@@ -73,13 +73,13 @@ class VecSpec extends SparkSuite {
         Array.tabulate(64L.toInt)(j => ((i * 17 + j * 13) % 256).toLong))
     }.toDF("id", "a", "b")
     val both = rows.select(
-      graft.functions.Vec.isqdCol(spark, $"a", $"b").as("native"),
+      graft.functions.Vec.isqdCol($"a", $"b").as("native"),
       aggregate(zip_with($"a", $"b", (x, y) => (x - y) * (x - y)),
         lit(0L), (acc, v) => acc + v).as("hof")).collect()
     both.foreach(r => assert(r.getLong(0) == r.getLong(1)))
     // null + mismatch contract mirrors vec_dot
     val n = rows.limit(1).select(
-      graft.functions.Vec.isqdCol(spark, lit(null).cast("array<bigint>"), $"b"))
+      graft.functions.Vec.isqdCol(lit(null).cast("array<bigint>"), $"b"))
       .collect()(0)
     assert(n.isNullAt(0))
   }
@@ -100,14 +100,14 @@ class VecSpec extends SparkSuite {
       }
     }
     val got = rows.select($"a",
-      graft.functions.Vec.hadamardCol(spark, $"a").as("h")).collect()
+      graft.functions.Vec.hadamardCol($"a").as("h")).collect()
     got.foreach { r =>
       assert(r.getSeq[Long](1) == naive(r.getSeq[Long](0).toArray))
     }
     // non-power-of-2 length fails loudly (a truncated code row is a bug)
     val bad = Seq(Tuple1(Array(1L, 2L, 3L))).toDF("a")
     val e = intercept[Exception] {
-      bad.select(graft.functions.Vec.hadamardCol(spark, $"a")).collect() }
+      bad.select(graft.functions.Vec.hadamardCol($"a")).collect() }
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
     assert(msgs(e).exists(_.contains("power-of-2")))

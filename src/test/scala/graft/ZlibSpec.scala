@@ -10,8 +10,7 @@ class ZlibSpec extends SparkSuite {
   test("zlib roundtrip through the Catalyst expression (codegen path)") {
     val df = Seq("hello graft", "", "a" * 10000, "unicode: ✓ ☃").toDF("s")
     val out = df
-      .select(Zlib.decompressCol(spark,
-        Zlib.compressCol(spark, $"s".cast("binary"))).cast("string").as("rt"),
+      .select(Zlib.decompressCol(Zlib.compressCol($"s".cast("binary"))).cast("string").as("rt"),
         $"s")
       .collect()
     out.foreach(r => assert(r.getString(0) == r.getString(1)))
@@ -26,7 +25,7 @@ class ZlibSpec extends SparkSuite {
 
   test("null propagates (nullIntolerant)") {
     val df = Seq(Some("x"), None).toDF("s")
-    val out = df.select(Zlib.compressCol(spark, $"s".cast("binary"))).collect()
+    val out = df.select(Zlib.compressCol($"s".cast("binary"))).collect()
     assert(out(1).isNullAt(0))
     assert(!out(0).isNullAt(0))
   }
